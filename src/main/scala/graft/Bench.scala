@@ -8,8 +8,9 @@ package graft
   *    executes the full physical plan and materializes output rows —
   *    `df.count()` would let Catalyst prune every column and turn scan
   *    benchmarks into metadata-only row counts;
-  *  - a warm-up pass at sf0.001 first, so JIT/codegen compilation cost
-  *    is not charged to whichever query happens to run first;
+  *  - an untimed warm-up pass at the target sf first, so JIT/codegen
+  *    compilation and layout builds are not charged to whichever query
+  *    happens to run first;
   *  - queries run in sorted name order for run-to-run comparability.
   */
 object Bench {

@@ -4,15 +4,20 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Per-stage profiling main — the guide-§1 empirical loop with
-  * `spark.ui.enabled=false`: run one (or a few) named queries and print,
-  * for every completed stage, wall time, task count, input bytes,
-  * shuffle read/write bytes and records, and spill. This is how "where
-  * does the time go" questions are answered for the bench queries
-  * without the UI.
+/** Diagnostic main — the guide-§1 empirical loop with
+  * `spark.ui.enabled=false`: run the named queries (all of them with no
+  * args) and print, per run,
+  *  - for every completed stage: wall time, task count, input bytes,
+  *    shuffle read/write bytes and records, and spill — "where does the
+  *    time go" without the UI;
+  *  - the plan census of the EXECUTED (post-AQE) plan: exchanges
+  *    (reused ones counted apart), in-memory scans, and parquet scans
+  *    per table. A same-table count > 1 for the same projection means a
+  *    shared subtree was recomputed per consumer branch (lazy cache
+  *    raced cold, or column pruning specialized the branches), the
+  *    duplicate-lineage pathology.
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *     sbt "runMain graft.Profile x61_lm_scores"
+  *   SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.Profile x61_lm_scores"
   *
   * Each query runs `reps` times (default 2, the second run measured on
   * a warm JIT/page cache like a bench rep) through the same
@@ -53,12 +58,26 @@ object Profile {
         .foreach(_.unpersist(blocking = true))
     }
     def mb(b: Long): String = f"${b / 1048576.0}%8.1f"
+    def census(plan: String): String = {
+      // AQE prints "== Initial Plan ==" below the final plan — drop it
+      // so every operator is counted once
+      val p = plan.split("== Initial Plan ==")(0)
+      def n(re: String) = re.r.findAllIn(p).size
+      val scans = "Scan parquet ?[^\\n ]*".r.findAllIn(p).toSeq
+        .groupBy(identity).view.mapValues(_.size).toSeq.sortBy(-_._2)
+      s"exchanges=${n("(?<!Reused)Exchange ")} reused=${n("ReusedExchange")}" +
+        s" imrScans=${n("InMemoryTableScan")}" +
+        scans.map { case (s, k) => f"\n  $k%2d x $s" }.mkString
+    }
 
-    args.foreach { name =>
+    val names =
+      if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { name =>
       (1 to reps).foreach { rep =>
         stages.clear()
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        qe.toRdd.count()
         val wall = (System.nanoTime() - t0) / 1e9
         // The listener bus delivers stage-completed events asynchronously;
         // without a drain pause, late events can be missed or bleed into
@@ -77,6 +96,7 @@ object Profile {
         val tot = stages.map(_.ms).filter(_ > 0).sum
         println(f"stage-ms total: $tot (wall ${wall * 1000}%.0f ms; gap = " +
           "driver/planning/scheduling)")
+        println(s"census: ${census(qe.executedPlan.toString)}")
       }
     }
     spark.stop()

@@ -398,6 +398,11 @@ final case class Catalog(spark: SparkSession, dir: String) {
     val spec = readBucketSpec(name).getOrElse(throw new IllegalStateException(
       s"no bucket sidecar for '$name' — nothing to compact"))
     val before = dataFileCount(name)
+    // Spark caches a table's file listing per session: rows another
+    // session appended since this one listed the files (a stream's
+    // cloned session) would be silently dropped by the rewrite
+    val qn = bucketedName(name)
+    if (spark.catalog.tableExists(qn)) spark.catalog.refreshTable(qn)
     val stagingCat = Catalog(spark, s"$dir/.compact_$name")
     fs.delete(new HPath(stagingCat.dir), true)
     // tombstone-aware: compaction is where recorded deletes become

@@ -219,10 +219,6 @@ final case class Q(df: DataFrame) {
     * (reference README.md:82,94): free in Spark. */
   def concat(other: Q): Q = Q(df.unionByName(other.df))
   def distinct: Q = Q(df.distinct())
-  def distinctOn(cols: String*): Q = Q(df.dropDuplicates(cols))
-
-  /** Spool (reference README.md:84-88, empty stub): cache the subtree. */
-  def spool(): Q = Q(df.cache())
 
   /** Typed output — reference Deserialize (src/operators/deserializing.rs)
     * ≡ Dataset[T]. Extra-trailing-column tolerance

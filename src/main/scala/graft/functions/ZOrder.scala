@@ -45,9 +45,6 @@ object ZOrder {
     greatest(lit(0L), least(lit(((1 << bits) - 1).toLong), scaled.cast("long")))
   }
 
-  def cell16(c: Column, min: Double, max: Double): Column =
-    cellBits(c, min, max, BitsPerDim)
-
   /** Rank-based cell id for SKEWED dimensions: cell = how many of the
     * (sorted, ascending) quantile `boundaries` the value has passed, so
     * cells hold near-equal row counts no matter how lopsided the value
@@ -86,9 +83,4 @@ object ZOrder {
     * lands at position 2i+1, bit i of `v` at 2i. */
   def interleave2(u: Column, v: Column): Column =
     interleaveN(Seq(u, v), BitsPerDim)
-
-  /** The z-value of two numeric columns given their global ranges. */
-  def zvalue2(c1: Column, min1: Double, max1: Double,
-      c2: Column, min2: Double, max2: Double): Column =
-    interleave2(cell16(c1, min1, max1), cell16(c2, min2, max2))
 }

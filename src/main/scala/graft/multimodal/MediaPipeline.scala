@@ -172,12 +172,6 @@ object MediaPipeline extends Serializable {
     }(org.apache.spark.sql.Encoders.row(schema))
   }
 
-  /** Binary→binary transform with the same batch shape: "resize" keeps
-    * the first `maxBytes` of the payload (fake; real impl re-encodes). */
-  def resizeStub(df: DataFrame, maxBytes: Int, binCol: String = "media"): DataFrame =
-    df.withColumn(binCol,
-      expr(s"substring($binCol, 1, $maxBytes)").cast(BinaryType))
-
   /** "Frame sampling": split the payload into fixed-size frames and keep
     * every `stride`-th — exercises array-of-binary columns. */
   def sampleFrames(df: DataFrame, frameBytes: Int, stride: Int,

@@ -78,20 +78,72 @@ object CorpusOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = graft.engine.Barrier.lineageBarrier(
       tf.groupBy(col("word")).agg(sum(col("tf")).as("cnt")))
-    val consts = counts.agg(sum(col("cnt")).as("n_total"),
-      count(lit(1)).as("vocab"))
-    tf.join(counts, Seq("word"))
-      .crossJoin(broadcast(consts))
-      .withColumn("lpw_q",
-        graft.functions.ExactMath.microQ(
-          log((col("cnt") + 1).cast("double") /
-            (col("n_total") + col("vocab")).cast("double"))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("n_tokens"),
-        graft.functions.ExactMath.divHalfUpSigned(
-          sum(col("tf") * col("lpw_q")),
-          sum(col("tf")) * lit(100L)).as("avg_logp_q"))
+    val denom = Denom.joined(unigramTotals(counts))
+    gridMean(denom.attach(tf.join(counts, Seq("word")))
+        .withColumn("lpw_q", addOneLogQ(col("cnt"), denom.value)),
+      Seq(col("doc_id")), col("tf"), col("lpw_q"), "n_tokens", "avg_logp_q")
   }
+
+  /** Add-one smoothed probability (cnt + 1) / denom of a count model's
+    * unit — the leaf of every frozen count model here (unigram,
+    * bigram, KN continuation, DSIR), batch and stream alike. */
+  private[graft] def addOneP(cnt: Column, denom: Column): Column =
+    (cnt + 1).cast("double") / denom
+
+  /** [[addOneP]]'s ln, quantized ONCE onto the BIGINT micro grid
+    * ([[graft.functions.ExactMath.microQ]]; ln is the only IEEE op). */
+  private[graft] def addOneLogQ(cnt: Column, denom: Column): Column =
+    graft.functions.ExactMath.microQ(log(addOneP(cnt, denom)))
+
+  /** Grid-mean rollup, the one scoring tail of every frozen count
+    * model: per `keys` group, `nName` = Σw and `qName` =
+    * divHalfUpSigned(Σ w·q, Σw·100) — the exact 1e-4-grid mean of a
+    * micro-grid per-unit score. Batch ops call it with keys doc_id and
+    * weight tf on the (doc, unit) grain; stream gates with keys
+    * (window(event_time), doc_id) and weight 1 on the token grain
+    * (streaming allows one stateful aggregation, so a stream cannot
+    * pre-aggregate tf). Integer sums are order-free, so both paths
+    * give the same digits. */
+  private[graft] def gridMean(scored: DataFrame, keys: Seq[Column],
+      w: Column, q: Column, nName: String, qName: String): DataFrame =
+    scored.groupBy(keys: _*)
+      .agg(sum(w).cast("long").as(nName),
+        graft.functions.ExactMath.divHalfUpSigned(sum(w * q),
+          sum(w) * lit(100L)).as(qName))
+
+  /** Where a count model's add-one denominator N+V comes from. Batch
+    * ops cross-join the one-row totals frame as a broadcast and read
+    * its two columns ([[Denom.joined]]); stream gates resolve the
+    * totals once at setup into a literal ([[Denom.resolved]] — a
+    * stream-static cross join would add a broadcast exchange to every
+    * micro-batch). */
+  private[graft] final case class Denom(consts: Option[DataFrame],
+      value: Column) {
+    def attach(df: DataFrame): DataFrame = consts.fold(df)(df.crossJoin)
+  }
+
+  private[graft] object Denom {
+    /** `totals`: one row of two long columns (N, V). */
+    def joined(totals: DataFrame): Denom = {
+      val Array(n, v) = totals.columns
+      Denom(Some(broadcast(totals)), (col(n) + col(v)).cast("double"))
+    }
+
+    /** [[joined]]'s totals collected once at setup; an empty model
+      * (N null or 0) fails here with `what` instead of mid-stream. */
+    def resolved(totals: DataFrame, what: String): Denom = {
+      val r = totals.head
+      require(!r.isNullAt(0) && r.getLong(0) > 0, s"$what: empty model")
+      Denom(None, lit((r.getLong(0) + r.getLong(1)).toDouble))
+    }
+  }
+
+  /** Adjacent-word bigrams "w1 w2" of a words array (empty under two
+    * words) — the unit of every bigram model, batch and stream. */
+  private[graft] def bigrams(ws: Column): Column = zip_with(
+    slice(ws, lit(1), size(ws) - 1),
+    slice(ws, lit(2), size(ws) - 1),
+    (a, b) => concat(a, lit(" "), b))
 
   /** Benchmark decontamination: per training document, how many
     * distinct `shingleK`-word shingles it shares with the benchmark
@@ -420,24 +472,32 @@ object CorpusOps {
     * absorbs stopwords), the smoothing constants ride a 1-row
     * broadcast, and the doc rollup partial-aggregates map-side. */
   def lmScoreApply(docs: DataFrame, counts: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val consts = counts.agg(sum(col("cnt")).as("n_total"),
-      count(lit(1)).as("vocab"))
-    tokenized(docs, idCol, textCol)
-      .select(col("doc_id"), explode(col("ws")).as("word"))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      .join(counts, Seq("word"), "left")
-      .crossJoin(broadcast(consts))
-      .withColumn("lpw_q",
-        graft.functions.ExactMath.microQ(
-          log((coalesce(col("cnt"), lit(0L)) + 1).cast("double") /
-            (col("n_total") + col("vocab")).cast("double"))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("n_tokens"),
-        graft.functions.ExactMath.divHalfUpSigned(
-          sum(col("tf") * col("lpw_q")),
-          sum(col("tf")) * lit(100L)).as("avg_logp_q"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    lmApplyKernel(tokenized(docs, idCol, textCol)
+        .select(col("doc_id"), explode(col("ws")).as("word"))
+        .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")),
+      counts, Denom.joined(unigramTotals(counts)), Seq(col("doc_id")),
+      col("tf"))
+
+  /** The frozen unigram LM kernel, shared by [[lmScoreApply]] and
+    * [[graft.streaming.EventStreams.lmScoreStream]] so batch/stream
+    * parity holds by construction: `grain` carries the `keys` and a
+    * `word` column; each word scores its [[addOneLogQ]] under `counts`
+    * (a word missing from the model counts 0 — the smoothed floor
+    * ln(1/(N+V))), rolled up by [[gridMean]] with weight `w`.
+    * Output: (keys…, n_tokens, avg_logp_q). */
+  private[graft] def lmApplyKernel(grain: DataFrame, counts: DataFrame,
+      denom: Denom, keys: Seq[Column], w: Column): DataFrame =
+    gridMean(denom.attach(grain.join(counts, Seq("word"), "left"))
+        .withColumn("lpw_q",
+          addOneLogQ(coalesce(col("cnt"), lit(0L)), denom.value)),
+      keys, w, col("lpw_q"), "n_tokens", "avg_logp_q")
+
+  /** A unigram count model's smoothing totals (N = Σcnt, V = #words)
+    * as a one-row frame — the [[Denom]] source. */
+  private[graft] def unigramTotals(counts: DataFrame, n: String = "n_total",
+      v: String = "vocab"): DataFrame =
+    counts.agg(sum(col("cnt")).as(n), count(lit(1)).as(v))
 
   /** Distinct-word count of a tokenized frame as a 1-row (vocab: long)
     * frame — the smoothing denominator shared by [[lmScoreFromWords]]
@@ -484,15 +544,11 @@ object CorpusOps {
     * un-checkpointed callers pay a second tokenize there. */
   def bigramLmScoreFromWords(words: DataFrame,
       vocab: Option[DataFrame] = None): DataFrame = {
-    val bigramArr = zip_with(
-      slice(col("ws"), lit(1), size(col("ws")) - 1),
-      slice(col("ws"), lit(2), size(col("ws")) - 1),
-      (a, b) => concat(a, lit(" "), b))
     // shared-materialization shape (r18, see lmScoreFromWords): lazy
     // columnar persist on the fat (doc, bigram) tf grain + eager
     // barrier on the vocab-sized cb table — cb's job populates the tf2
     // cache race-free and the scoring join reads it warm
-    val tf2 = words.select(col("doc_id"), explode(bigramArr).as("bg"))
+    val tf2 = words.select(col("doc_id"), explode(bigrams(col("ws"))).as("bg"))
       .groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -501,19 +557,14 @@ object CorpusOps {
     val cl = cb.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
       .agg(sum(col("cb")).as("cl"))
     val vocabDf = vocab.getOrElse(vocabOf(words))
-    tf2.join(cb, Seq("bg"))
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      .join(cl, Seq("w1"))
-      .crossJoin(broadcast(vocabDf))
-      .withColumn("lpb_q",
-        graft.functions.ExactMath.microQ(
-          log((col("cb") + 1).cast("double") /
-            (col("cl") + col("vocab")).cast("double"))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("n_bigrams"),
-        graft.functions.ExactMath.divHalfUpSigned(
-          sum(col("tf") * col("lpb_q")),
-          sum(col("tf")) * lit(100L)).as("avg_logp2_q"))
+    gridMean(tf2.join(cb, Seq("bg"))
+        .withColumn("w1", substring_index(col("bg"), " ", 1))
+        .join(cl, Seq("w1"))
+        .crossJoin(broadcast(vocabDf))
+        .withColumn("lpb_q", addOneLogQ(col("cb"),
+          (col("cl") + col("vocab")).cast("double"))),
+      Seq(col("doc_id")), col("tf"), col("lpb_q"), "n_bigrams",
+      "avg_logp2_q")
   }
 
   /** Kneser–Ney smoothed bigram LM scoring (Kneser & Ney 1995; the
@@ -545,30 +596,22 @@ object CorpusOps {
     * skew, the single N_bigrams scalar on a 1-row broadcast. */
   def knBigramScoreFromWords(words: DataFrame,
       discount: Double = 0.75): DataFrame = {
-    val bigramArr = zip_with(
-      slice(col("ws"), lit(1), size(col("ws")) - 1),
-      slice(col("ws"), lit(2), size(col("ws")) - 1),
-      (a, b) => concat(a, lit(" "), b))
     // shared-materialization shape (r18, see lmScoreFromWords): lazy
     // columnar persist on the fat (doc, bigram) tf grain + eager
     // barrier on the vocab-sized cb table — cb's job populates the tf2
     // cache race-free (killing the per-consumer tokenize+explode
     // re-runs the r17 verdict flagged), and the probe join reads the
     // warm compact cache; left/cont/nb all read cb's tiny blocks.
-    val tf2 = words.select(col("doc_id"), explode(bigramArr).as("bg"))
+    val tf2 = words.select(col("doc_id"), explode(bigrams(col("ws"))).as("bg"))
       .groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = graft.engine.Barrier.lineageBarrier(
-      tf2.groupBy(col("bg")).agg(sum(col("tf")).as("cb"))
-        .withColumn("w1", substring_index(col("bg"), " ", 1))
-        .withColumn("w2", substring_index(col("bg"), " ", -1)))
-    val left = cb.groupBy(col("w1"))
-      .agg(sum(col("cb")).as("cl"), count(lit(1)).as("n1f"))
-    val cont = cb.groupBy(col("w2")).agg(count(lit(1)).as("n1p"))
+      bigramSides(tf2.groupBy(col("bg")).agg(sum(col("tf")).as("cb"))))
+    val (left, cont) = knStats(cb)
     val nb = cb.agg(count(lit(1)).as("nb"))
-    tf2.join(cb.select(col("bg"), col("cb"), col("w1"), col("w2")),
-        Seq("bg"))
+    val scored = tf2.join(cb.select(col("bg"), col("cb"), col("w1"),
+        col("w2")), Seq("bg"))
       .join(left, Seq("w1"))
       .join(cont, Seq("w2"))
       .crossJoin(broadcast(nb))
@@ -580,11 +623,8 @@ object CorpusOps {
             (lit(discount) * col("n1f").cast("double") /
               col("cl").cast("double")) *
             (col("n1p").cast("double") / col("nb").cast("double")))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("n_bigrams"),
-        graft.functions.ExactMath.divHalfUpSigned(
-          sum(col("tf") * col("lpb_q")),
-          sum(col("tf")) * lit(100L)).as("avg_logp_kn_q"))
+    gridMean(scored, Seq(col("doc_id")), col("tf"), col("lpb_q"),
+      "n_bigrams", "avg_logp_kn_q")
   }
 
   /** Bigram count table of a corpus — the persistable KN/bigram MODEL
@@ -592,14 +632,9 @@ object CorpusOps {
     * corpus, apply forever — the x74 contract one smoothing family
     * up). Output: (bg "w1 w2", cb). */
   def bigramCounts(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val ws = TF.words(col(textCol))
-    docs.select(explode(zip_with(
-        slice(ws, lit(1), size(ws) - 1),
-        slice(ws, lit(2), size(ws) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("bg"))
+      textCol: String = "text"): DataFrame =
+    docs.select(explode(bigrams(TF.words(col(textCol)))).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("cb"))
-  }
 
   /** A TRAINED Kneser–Ney bigram model applied to new documents — the
     * CCNet production shape for [[knBigramScoreFromWords]] (which
@@ -636,42 +671,59 @@ object CorpusOps {
     // profile of x111: ~6 copies of the vocab-sized count stage at
     // 0.3–1.1 s each). cbx is bigram-vocab-sized, so the barrier pays
     // one small job and every consumer reads materialized blocks.
-    val cbx = graft.engine.Barrier.lineageBarrier(counts
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      .withColumn("w2", substring_index(col("bg"), " ", -1)))
-    val left = cbx.groupBy(col("w1"))
-      .agg(sum(col("cb")).as("cl"), count(lit(1)).as("n1f"))
-    val cont = cbx.groupBy(col("w2")).agg(count(lit(1)).as("n1p"))
-    val scal = cbx.agg(count(lit(1)).as("nb"),
-      countDistinct(col("w2")).as("vc"))
-    val ws = TF.words(col(textCol))
-    val pc = (coalesce(col("n1p"), lit(0L)) + 1).cast("double") /
-      (col("nb") + col("vc")).cast("double")
+    val cbx = graft.engine.Barrier.lineageBarrier(bigramSides(counts))
+    knApplyKernel(docs
+        .select(col(idCol).as("doc_id"),
+          explode(bigrams(TF.words(col(textCol)))).as("bg"))
+        .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("tf")),
+      cbx, Denom.joined(knTotals(cbx)), discount, Seq(col("doc_id")),
+      col("tf"))
+  }
+
+  /** A bigram frame with its halves: w1, w2 split off `bg`. */
+  private[graft] def bigramSides(df: DataFrame): DataFrame =
+    df.withColumn("w1", substring_index(col("bg"), " ", 1))
+      .withColumn("w2", substring_index(col("bg"), " ", -1))
+
+  /** KN statistics of a bigram count table (bg, cb, w1, w2): the left
+    * context's mass and fan-out (w1, cl, n1f), and the continuation
+    * fan-in (w2, n1p). */
+  private def knStats(cbx: DataFrame): (DataFrame, DataFrame) =
+    (cbx.groupBy(col("w1"))
+      .agg(sum(col("cb")).as("cl"), count(lit(1)).as("n1f")),
+     cbx.groupBy(col("w2")).agg(count(lit(1)).as("n1p")))
+
+  /** A KN model's type totals (N_bg, V_c) as a one-row frame — the
+    * continuation distribution's [[Denom]] source. */
+  private[graft] def knTotals(cbx: DataFrame): DataFrame =
+    cbx.agg(count(lit(1)).as("nb"), countDistinct(col("w2")).as("vc"))
+
+  /** The frozen Kneser–Ney kernel, shared by [[knBigramApply]] and
+    * [[graft.streaming.EventStreams.knScoreStream]] so batch/stream
+    * parity holds by construction: `grain` carries the `keys` and a
+    * `bg` column, `cbx` is the model's count table with its sides
+    * ([[bigramSides]]). Each bigram scores the seen-context
+    * interpolation, or the add-one continuation floor P̃c alone when
+    * its context w1 is unseen (the formula is on [[knBigramApply]]);
+    * [[gridMean]] rolls up per key with weight `w`.
+    * Output: (keys…, n_bigrams, avg_logp_kn_q). */
+  private[graft] def knApplyKernel(grain: DataFrame, cbx: DataFrame,
+      denom: Denom, discount: Double, keys: Seq[Column],
+      w: Column): DataFrame = {
+    val (left, cont) = knStats(cbx)
+    val pc = addOneP(coalesce(col("n1p"), lit(0L)), denom.value)
     val pSeen =
       greatest(coalesce(col("cb"), lit(0L)).cast("double") - discount,
         lit(0.0d)) / col("cl").cast("double") +
       (lit(discount) * col("n1f").cast("double") /
         col("cl").cast("double")) * pc
-    docs
-      .select(col(idCol).as("doc_id"), explode(zip_with(
-          slice(ws, lit(1), size(ws) - 1),
-          slice(ws, lit(2), size(ws) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("bg"))
-      .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("tf"))
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      .withColumn("w2", substring_index(col("bg"), " ", -1))
-      .join(cbx.select(col("bg"), col("cb")), Seq("bg"), "left")
-      .join(left, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(scal))
-      .withColumn("lpb_q",
-        graft.functions.ExactMath.microQ(
-          log(when(col("cl").isNotNull, pSeen).otherwise(pc))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("n_bigrams"),
-        graft.functions.ExactMath.divHalfUpSigned(
-          sum(col("tf") * col("lpb_q")),
-          sum(col("tf")) * lit(100L)).as("avg_logp_kn_q"))
+    gridMean(denom.attach(bigramSides(grain)
+        .join(cbx.select(col("bg"), col("cb")), Seq("bg"), "left")
+        .join(left, Seq("w1"), "left")
+        .join(cont, Seq("w2"), "left"))
+      .withColumn("lpb_q", graft.functions.ExactMath.microQ(
+        log(when(col("cl").isNotNull, pSeen).otherwise(pc)))),
+      keys, w, col("lpb_q"), "n_bigrams", "avg_logp_kn_q")
   }
 
   /** CCNet perplexity bucketing (Wenzek et al. LREC 2020 §4.2) — the
@@ -976,13 +1028,29 @@ object CorpusOps {
     // not sample alike). The keep decision stays per-ROW (same hash
     // threshold), so expected kept weight per group follows the same
     // (W_min/W_g)^(1-alpha) law the doc form applies to counts.
-    docs.join(broadcast(
+    mixKernel(docs, broadcast(
         temperatureRates(docs, groupCol, alpha, resolution, weightCol)),
-      groupCol)
-      .filter(TF.hash60(col(idCol).cast("string"), s"$salt|") % resolution
-        < col("thr"))
-      .select(col(idCol), col(groupCol), round(col("rate"), 6).as("rate"))
+      groupCol, idCol, salt, resolution)
   }
+
+  /** The mixture keep predicate: a row survives iff
+    * hash60(salt|id) mod `resolution` is under its group's integer
+    * threshold `thr` ([[temperatureRates]]). */
+  private[graft] def mixKeep(id: Column, salt: String,
+      resolution: Long): Column =
+    TF.hash60(id.cast("string"), s"$salt|") % resolution < col("thr")
+
+  /** The frozen-rates mixture kernel, shared by [[temperatureSample]]
+    * and [[graft.streaming.EventStreams.mixGateStream]]: each row joins
+    * its group's (rate, thr) and is kept by [[mixKeep]] — stateless,
+    * a pure function of (id, salt, rates). Output: the kept rows as
+    * (id, group, rate rounded to 6). */
+  private[graft] def mixKernel(docs: DataFrame, rates: DataFrame,
+      groupCol: String, idCol: String, salt: String,
+      resolution: Long): DataFrame =
+    docs.join(rates, Seq(groupCol))
+      .filter(mixKeep(col(idCol), salt, resolution))
+      .select(col(idCol), col(groupCol), round(col("rate"), 6).as("rate"))
 
   /** The trained half of [[temperatureSample]] as its own frame —
     * (group, rate, thr): per-group keep rates from the
@@ -1092,31 +1160,37 @@ object CorpusOps {
     // stages, 3.4 stage-seconds for a 1.8 s wall)
     val targetCounts = graft.engine.Barrier.lineageBarrier(targetCounts0)
     val sourceCounts = graft.engine.Barrier.lineageBarrier(sourceCounts0)
-    def consts(c: DataFrame, n: String, v: String) = broadcast(
-      c.agg(sum(col("cnt")).as(n), count(lit(1)).as(v)))
-    def lpw(cnt: Column, n: Column, v: Column) =
-      graft.functions.ExactMath.microQ(
-        log((coalesce(cnt, lit(0L)) + 1).cast("double") /
-          (n + v).cast("double")))
-    tokenized(pool, idCol, textCol)
-      .select(col("doc_id"), explode(col("ws")).as("word"))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      .join(targetCounts.select(col("word"), col("cnt").as("cnt_t")),
+    dsirKernel(tokenized(pool, idCol, textCol)
+        .select(col("doc_id"), explode(col("ws")).as("word"))
+        .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")),
+      targetCounts,
+      Denom.joined(unigramTotals(targetCounts, "nt_t", "v_t")),
+      sourceCounts,
+      Denom.joined(unigramTotals(sourceCounts, "nt_s", "v_s")),
+      Seq(col("doc_id")), col("tf"))
+  }
+
+  /** The frozen two-model DSIR kernel, shared by [[dsirWeights]] and
+    * [[graft.streaming.EventStreams.dsirScoreStream]] so batch/stream
+    * parity holds by construction: `grain` carries the `keys` and a
+    * `word` column; each word scores [[addOneLogQ]] under the target
+    * model minus the same under the source model (a missing word
+    * counts 0 in either), rolled up by [[gridMean]] with weight `w`.
+    * Output: (keys…, n_tokens, log_ratio_q). */
+  private[graft] def dsirKernel(grain: DataFrame, target: DataFrame,
+      tDenom: Denom, source: DataFrame, sDenom: Denom, keys: Seq[Column],
+      w: Column): DataFrame = {
+    val joined = grain
+      .join(target.select(col("word"), col("cnt").as("cnt_t")),
         Seq("word"), "left")
-      .join(sourceCounts.select(col("word"), col("cnt").as("cnt_s")),
+      .join(source.select(col("word"), col("cnt").as("cnt_s")),
         Seq("word"), "left")
-      .crossJoin(consts(targetCounts, "nt_t", "v_t"))
-      .crossJoin(consts(sourceCounts, "nt_s", "v_s"))
-      .withColumn("lpw_t", lpw(col("cnt_t"), col("nt_t"), col("v_t")))
-      .withColumn("lpw_s", lpw(col("cnt_s"), col("nt_s"), col("v_s")))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("n_tokens"),
-        // exact integer mean on the 1e-4 grid — the old double round
-        // had an IEEE −0.0 repr hazard here (guarded by +0.0); the
-        // integer grid has no signed zero at all
-        graft.functions.ExactMath.divHalfUpSigned(
-          sum(col("tf") * (col("lpw_t") - col("lpw_s"))),
-          sum(col("tf")) * lit(100L)).as("log_ratio_q"))
+    gridMean(sDenom.attach(tDenom.attach(joined))
+        .withColumn("lpw_t",
+          addOneLogQ(coalesce(col("cnt_t"), lit(0L)), tDenom.value))
+        .withColumn("lpw_s",
+          addOneLogQ(coalesce(col("cnt_s"), lit(0L)), sDenom.value)),
+      keys, w, col("lpw_t") - col("lpw_s"), "n_tokens", "log_ratio_q")
   }
 
   /** Token-budget mixture PLAN — the static allocation table a training
@@ -2065,28 +2139,38 @@ object CorpusOps {
     * heavy-hitter mass). Only `doc_id` and `c` are read. */
   def entropySignalFromCounts(cnt: DataFrame): DataFrame = {
     val EM = graft.functions.ExactMath
-    // all logs quantized ONCE to BIGINT micro-units (the ExactMath
-    // grid); num = lnw_q·nw − Σ c·lnc_q is an exact integer in
-    // 1e-6·nat·token units, so norm_entropy is a pure integer rational
-    // and entropy needs exactly ONE IEEE division (by nw·ln2·100, with
-    // ln2·100 pinned as a literal so no libm variance) before its one
-    // nearest-integer rounding onto the 1e-4 grid
-    val lnw_q = EM.microQ(log(col("n_words").cast("double")))
     val lnt_q = EM.microQ(log(col("n_types").cast("double")))
-    val num = lnw_q * col("n_words") - col("clc_q")
+    val num = entropyNumQ(col("n_words"), col("clc_q"))
     cnt.groupBy(col("doc_id"))
       .agg(sum(col("c")).cast("long").as("n_words"),
         count(lit(1)).cast("long").as("n_types"),
-        sum(col("c") * EM.microQ(log(col("c").cast("double"))))
-          .cast("long").as("clc_q"))
+        sum(clnTermQ(col("c"))).cast("long").as("clc_q"))
       .select(col("doc_id"), col("n_words"), col("n_types"),
-        round(num.cast("double") /
-          (col("n_words").cast("double") * lit(69.31471805599453)))
-          .cast("long").as("entropy_q"),
+        entropyQ(col("n_words"), col("clc_q")).as("entropy_q"),
         when(col("n_types") > 1,
           EM.divHalfUp(num * lit(10000L), col("n_words") * lnt_q))
           .otherwise(lit(0L)).as("norm_entropy_q"))
   }
+
+  /** One word type's c·ln c term, ln micro-quantized — summed per doc
+    * into the `clcQ` of [[entropyQ]]. */
+  private[graft] def clnTermQ(c: Column): Column =
+    c * graft.functions.ExactMath.microQ(log(c.cast("double")))
+
+  /** Entropy numerator ln(nW)·nW − Σ c·ln c: an exact integer in
+    * 1e-6·nat·token units (every ln micro-quantized once). */
+  private def entropyNumQ(nW: Column, clcQ: Column): Column =
+    graft.functions.ExactMath.microQ(log(nW.cast("double"))) * nW - clcQ
+
+  /** The integer-grid within-doc word entropy in bits (1e-4 units) —
+    * one formula for [[entropySignalFromCounts]], [[curateV6]] and
+    * [[graft.streaming.EventStreams.curateGateStream]]: the
+    * [[entropyNumQ]] numerator takes exactly ONE IEEE division, by
+    * nW·ln2·100 with ln2·100 pinned as a literal (no libm variance),
+    * before its one nearest-integer rounding. */
+  private[graft] def entropyQ(nW: Column, clcQ: Column): Column =
+    round(entropyNumQ(nW, clcQ).cast("double") /
+      (nW.cast("double") * lit(69.31471805599453))).cast("long")
 
   /** Corpus SATURATION curve — the Heaps-law diagnostic a growing
     * corpus is monitored with: split ingestion into `waves`
@@ -2297,10 +2381,8 @@ object CorpusOps {
       .withColumn("lp_q",
         graft.functions.ExactMath.microQ(
           log(col("cnt_s").cast("double") / col("n_s").cast("double"))))
-      .withColumn("lq_q",
-        graft.functions.ExactMath.microQ(
-          log((col("cnt_c") + 1).cast("double") /
-            (col("n_c") + col("vocab")).cast("double"))))
+      .withColumn("lq_q", addOneLogQ(col("cnt_c"),
+        (col("n_c") + col("vocab")).cast("double")))
       .groupBy(col(groupCol))
       .agg(sum(col("cnt_s")).cast("long").as("n_tokens"),
         // Σ p·(lp−lq) with p = cnt_s/n_s and n_s constant per group is
@@ -2411,17 +2493,14 @@ object CorpusOps {
     // un-materialized both re-ran the reference scan+explode
     val counts = graft.engine.Barrier.lineageBarrier(
       unigramCounts(ref, idCol, textCol))
-    val consts = counts.agg(sum(col("cnt")).as("n_total"),
-      count(lit(1)).as("vocab"))
-    val domLoss = eval
-      .select(col(groupCol), explode(TF.words(col(textCol))).as("word"))
-      .groupBy(col(groupCol), col("word"))
-      .agg(count(lit(1)).as("tf"))
-      .join(counts, Seq("word"), "left")
-      .crossJoin(broadcast(consts))
+    val denom = Denom.joined(unigramTotals(counts))
+    val domLoss = denom.attach(eval
+        .select(col(groupCol), explode(TF.words(col(textCol))).as("word"))
+        .groupBy(col(groupCol), col("word"))
+        .agg(count(lit(1)).as("tf"))
+        .join(counts, Seq("word"), "left"))
       .withColumn("lpw_q",
-        EM.microQ(log((coalesce(col("cnt"), lit(0L)) + 1).cast("double") /
-          (col("n_total") + col("vocab")).cast("double"))))
+        addOneLogQ(coalesce(col("cnt"), lit(0L)), denom.value))
       .groupBy(col(groupCol))
       .agg(sum(col("tf")).cast("long").as("n_tokens"),
         sum(col("tf") * col("lpw_q")).cast("long").as("s_q"))
@@ -2484,26 +2563,19 @@ object CorpusOps {
       idCol: String = "doc_id", groupCol: String = "lang",
       textCol: String = "text"): DataFrame = {
     require(pLow >= 0 && pLow <= 100, s"pLow in [0,100], got $pLow")
-    val EM = graft.functions.ExactMath
     val res = 1000000L
     val cnt = docs
       .select(col(idCol).as("doc_id"), explode(TF.words(col(textCol)))
         .as("word"))
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("c"))
-    // ent_q: x112's integer-grid entropy ([[entropySignalFromWords]]'
-    // exact formula — micro-quantized logs, exact integer numerator,
-    // ONE IEEE division by nw·ln2·100 with the pinned literal)
+    // ent_q: x112's integer-grid entropy ([[entropyQ]])
     val ent = cnt.groupBy(col("doc_id"))
       .agg(sum(col("c")).cast("long").as("n_words"),
-        sum(col("c") * EM.microQ(log(col("c").cast("double"))))
-          .cast("long").as("clc_q"),
+        sum(clnTermQ(col("c"))).cast("long").as("clc_q"),
         (max(col("c")) === min(col("c"))).as("uni0"))
       .select(col("doc_id"), col("uni0"),
-        round((EM.microQ(log(col("n_words").cast("double"))) *
-          col("n_words") - col("clc_q")).cast("double") /
-          (col("n_words").cast("double") * lit(69.31471805599453)))
-          .cast("long").as("ent_q"))
+        entropyQ(col("n_words"), col("clc_q")).as("ent_q"))
     val cut = broadcast(ent.agg(
       percentile(col("ent_q"), lit(pLow / 100.0)).as("cut")))
     val gates = docs.select(col(idCol).as("doc_id"),
@@ -2536,8 +2608,7 @@ object CorpusOps {
       g2.filter(!col("low") && !col("uni") && !col("dup"))
         .select(col("doc_id"), col("grp").as(groupCol)),
       groupCol, alpha, res)
-    val inMix = TF.hash60(col("doc_id").cast("string"), s"$salt|") % res <
-      col("thr")
+    val inMix = mixKeep(col("doc_id"), salt, res)
     g2.join(broadcast(rates.select(col(groupCol).as("grp"), col("thr"))),
         Seq("grp"), "left")
       .select(col("doc_id").as(idCol), col("grp").as(groupCol),

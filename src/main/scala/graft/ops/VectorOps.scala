@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -444,21 +444,38 @@ object VectorOps {
       .select(col("vec_id"), col("s.sub").as("sub"), col("s.sv").as("sv"))
   }
 
+  /** The PQ distance kernel: squared L2 between a subvector and a
+    * codebook entry, quantized to 1/2^20 integer units — one definition
+    * for the batch encode ([[pqAssign]]), every ADC lookup table and
+    * the stream encode ([[graft.streaming.EventStreams.pqEncodeStream]]),
+    * so codes and distances agree digit for digit. */
+  private[graft] def pqQd2(sv: Column, ce: Column): Column =
+    round(aggregate(
+      zip_with(sv, ce, (x, y) =>
+        (x.cast("double") - y.cast("double")) *
+          (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc, v) => acc + v) * 1048576).cast("long")
+
+  /** ADC lookup table: every query subvector's [[pqQd2]] to every
+    * codebook entry of its subspace — (q_id, sub, c_id, pd2). */
+  private def pqLut(queries: DataFrame, cents: DataFrame, m: Int,
+      idCol: String, vecCol: String): DataFrame =
+    pqSubvectors(queries, m, idCol, vecCol)
+      .withColumnRenamed("vec_id", "q_id")
+      .join(cents, Seq("sub"))
+      .select(col("q_id"), col("sub"), col("c_id"),
+        pqQd2(col("sv"), col("c_e")).as("pd2"))
+
   /** Nearest-codebook-entry assignment per (vector, subspace):
     * (vec_id, sub, sv, code, qd2 — the 1/2^20-quantized squared L2 to
     * the winning entry). `cents` is (sub, c_id, c_e); it is
     * m·ksub-sized and broadcast, scoring is map-side, and the rank
     * window is keyed by (sub, vec_id) — never corpus-wide. */
   def pqAssign(svs: DataFrame, cents: DataFrame): DataFrame = {
-    val d2 = aggregate(
-      zip_with(col("sv"), col("c_e"), (x, y) =>
-        (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
     val byVec = Window.partitionBy("sub", "vec_id")
       .orderBy(col("qd2").asc, col("c_id").asc)
     svs.join(broadcast(cents), Seq("sub"))
-      .withColumn("qd2", round(d2 * 1048576).cast("long"))
+      .withColumn("qd2", pqQd2(col("sv"), col("c_e")))
       .withColumn("rn", row_number().over(byVec))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("sub"), col("sv"),
@@ -522,16 +539,7 @@ object VectorOps {
   def pqAdcTopK(queries: DataFrame, codes: DataFrame, cents: DataFrame,
       k: Int, m: Int = 4, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val d2 = aggregate(
-      zip_with(col("sv"), col("c_e"), (x, y) =>
-        (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-    val lut = pqSubvectors(queries, m, idCol, vecCol)
-      .withColumnRenamed("vec_id", "q_id")
-      .join(cents, Seq("sub"))
-      .select(col("q_id"), col("sub"), col("c_id"),
-        round(d2 * 1048576).cast("long").as("pd2"))
+    val lut = pqLut(queries, cents, m, idCol, vecCol)
     val byQ = Window.partitionBy("q_id")
       .orderBy(col("adc_qd2").asc, col("n_id").asc)
     codes.join(broadcast(lut),
@@ -742,16 +750,7 @@ object VectorOps {
   def ivfPqTopK(qCells: DataFrame, dbCells: DataFrame, queries: DataFrame,
       codes: DataFrame, cents: DataFrame, k: Int, m: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val d2 = aggregate(
-      zip_with(col("sv"), col("c_e"), (x, y) =>
-        (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-    val lut = pqSubvectors(queries, m, idCol, vecCol)
-      .withColumnRenamed("vec_id", "q_id")
-      .join(cents, Seq("sub"))
-      .select(col("q_id"), col("sub"), col("c_id"),
-        round(d2 * 1048576).cast("long").as("pd2"))
+    val lut = pqLut(queries, cents, m, idCol, vecCol)
     val cand = qCells.select(col("vec_id").as("q_id"), col("cell"))
       .join(dbCells.select(col("vec_id").as("n_id"), col("cell")), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
@@ -798,15 +797,10 @@ object VectorOps {
             slice(col("qr"), mi * dsub + 1, dsub).as("sv")))).as("s"))
       .select(col("q_id"), col("cell"), col("s.sub").as("sub"),
         col("s.sv").as("sv"))
-    val d2 = aggregate(
-      zip_with(col("sv"), col("c_e"), (x, y) =>
-        (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
     val lut = qsv.join(cents, Seq("sub"))
       .select(col("q_id"), col("cell"), col("sub"),
         col("c_id").as("code"),
-        round(d2 * 1048576).cast("long").as("pd2"))
+        pqQd2(col("sv"), col("c_e")).as("pd2"))
     val dbCodes = codes
       .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
     val byQ = Window.partitionBy("q_id")

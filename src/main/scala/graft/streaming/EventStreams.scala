@@ -5,6 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.{TextFunctions => TF}
+import graft.ops.{CorpusOps => CO}
+
 /** Structured Streaming surface over the `events` table shape —
   * the streaming capability the reference only roadmaps (its `spools` /
   * streaming modules are empty stubs; reference README.md:84-88).
@@ -39,15 +42,19 @@ object EventStreams {
   private def eventTime(df: DataFrame, name: String = "ts"): Column =
     tsFromNs(graft.functions.EventTime.nanosCol(df.schema(name).dataType, col(name)))
 
+  /** `df` with its event-time column and watermark — every windowed
+    * stream's preamble. */
+  private def watermarked(df: DataFrame, watermarkDelay: String): DataFrame =
+    df.withColumn("event_time", eventTime(df))
+      .withWatermark("event_time", watermarkDelay)
+
   /** Tumbling event-time window counts with watermark — the streaming
     * twin of batch x15_events_window. */
   def tumblingCounts(
       events: DataFrame,
       windowDur: String = "1 hour",
       watermarkDelay: String = "2 hours"): DataFrame =
-    events
-      .withColumn("event_time", eventTime(events))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(events, watermarkDelay)
       .groupBy(window(col("event_time"), windowDur), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
@@ -57,9 +64,7 @@ object EventStreams {
       events: DataFrame,
       gap: String = "30 minutes",
       watermarkDelay: String = "2 hours"): DataFrame =
-    events
-      .withColumn("event_time", eventTime(events))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(events, watermarkDelay)
       .groupBy(session_window(col("event_time"), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
 
@@ -76,9 +81,7 @@ object EventStreams {
       events: DataFrame,
       fpCol: String,
       watermarkDelay: String = "2 hours"): DataFrame =
-    events
-      .withColumn("event_time", eventTime(events))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(events, watermarkDelay)
       .dropDuplicatesWithinWatermark(fpCol)
 
   /** Stream-stream interval join, watermarked on BOTH sides: each left
@@ -135,7 +138,7 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val txn = batchId + 1
-        val fp = md5(graft.functions.TextFunctions.normText(col(textCol)))
+        val fp = md5(TF.normText(col(textCol)))
         val fs = new org.apache.hadoop.fs.Path(logPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // intra-batch dedup FIRST (the snapshot anti-join only sees
@@ -245,11 +248,9 @@ object EventStreams {
     // never disagree on the bucket space)
     val keyExprs = graft.ops.TextDedup.simhashKeyExprs(
       col("sh"), maxHamming, pairKeys)
-    docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(docs, watermarkDelay)
       .select(col("doc_id"),
-        graft.functions.TextFunctions.simhashFast(col("text")).as("sh"),
+        TF.simhashFast(col("text")).as("sh"),
         col("event_time"))
       .select(col("doc_id"), col("sh"), col("event_time"),
         posexplode(array(keyExprs: _*)).as(Seq("chunk", "cval")))
@@ -367,12 +368,9 @@ object EventStreams {
       implicit spark: SparkSession): Dataset[MhNearDup] = {
     import spark.implicits._
     val horizonMs = durationMs(watermarkDelay)
-    val TF = graft.functions.TextFunctions
     val keyExprs = graft.ops.TextDedup.minhashBandKeyExprs(
       col("mh"), numHashes, bands)
-    docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(docs, watermarkDelay)
       .select(col("doc_id"),
         TF.shingleSetFast(TF.words(col("text")), shingleK).as("el_set"),
         TF.minhashSigsFast(TF.words(col("text")), shingleK, numHashes).as("mh"),
@@ -817,22 +815,15 @@ object EventStreams {
       }
   }
 
-  /** Stream-static LM quality scoring — the inference form of batch
-    * x51 ([[graft.ops.CorpusOps.lmScore]]): incoming documents are
+  /** Stream-static LM quality scoring — the ingest form of
+    * [[graft.ops.CorpusOps.lmScoreApply]]: incoming documents are
     * scored against a PRE-TRAINED unigram count table (train once per
     * corpus generation on the batch side; the stream pays only the
-    * lookup). The count table is a STATIC frame: the stream-static
-    * equi-join is stateless (no watermark state — Spark replans the
-    * static side per micro-batch), so the only streaming state is the
-    * per-(window, doc) aggregation, bounded by the watermark.
-    *
-    * Words unseen in training smooth as count 0 (add-one), so
-    * out-of-vocabulary junk scores low instead of erroring — exactly
-    * what an ingest-time quality gate wants. Scoring math mirrors the
-    * batch form digit-for-digit (per-word log-prob quantized once to
-    * BIGINT micro-units, exact integer sum, integer divide-half-up
-    * mean — the ExactMath grid): StreamingSpec pins batch/stream
-    * score parity on a shared corpus.
+    * lookup) by the same kernel, [[graft.ops.CorpusOps.lmApplyKernel]],
+    * keyed (window, doc_id) with weight 1 per token. The count table is
+    * a STATIC frame: the stream-static equi-join is stateless, so the
+    * only streaming state is the per-(window, doc) aggregation, bounded
+    * by the watermark. Out-of-vocabulary words take the add-one floor.
     *
     * `counts`: (word, cnt) — [[graft.ops.CorpusOps.unigramCounts]],
     * which uses EXACTLY the batch scorer's tokenization (an empty doc
@@ -842,31 +833,30 @@ object EventStreams {
     * avg_logp_q — 1e-4 integer units). */
   def lmScoreStream(docs: DataFrame, counts: DataFrame,
       windowDur: String = "10 minutes",
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    // corpus constants are static — resolved once at stream setup
-    val consts = counts.agg(sum(col("cnt")).as("n_total"),
-      count(lit(1)).as("vocab")).head
-    // sum() over zero rows is null — fail with a real message instead
-    // of an NPE deep in Row.getLong when the counts table is empty
-    require(!consts.isNullAt(0),
-      "lmScoreStream: empty counts table (no training words)")
-    val denom = (consts.getLong(0) + consts.getLong(1)).toDouble
-    docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"),
-        explode(TF.words(col("text"))).as("word"))
-      .join(counts, Seq("word"), "left")
-      .withColumn("lpw_q",
-        graft.functions.ExactMath.microQ(
-          log((coalesce(col("cnt"), lit(0L)) + 1).cast("double") /
-            lit(denom))))
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        graft.functions.ExactMath.divHalfUpSigned(sum(col("lpw_q")),
-          count(lit(1)) * lit(100L)).as("avg_logp_q"))
-  }
+      watermarkDelay: String = "1 hour"): DataFrame =
+    CO.lmApplyKernel(wordTokens(docs, watermarkDelay), counts,
+      CO.Denom.resolved(CO.unigramTotals(counts), "lmScoreStream"),
+      docWindow(windowDur), lit(1L))
+
+  /** The watermarked token array every windowed frozen-model gate
+    * starts from: (doc_id, event_time, ws = words(`textCol`), extra…). */
+  private def watermarkedWords(docs: DataFrame, watermarkDelay: String,
+      textCol: String = "text", extra: Seq[Column] = Nil): DataFrame =
+    watermarked(docs, watermarkDelay)
+      .select(Seq(col("doc_id"), col("event_time"),
+        TF.words(col(textCol)).as("ws")) ++
+        extra: _*)
+
+  /** [[watermarkedWords]] exploded to the token grain
+    * (doc_id, event_time, word). */
+  private def wordTokens(docs: DataFrame,
+      watermarkDelay: String): DataFrame =
+    watermarkedWords(docs, watermarkDelay)
+      .select(col("doc_id"), col("event_time"), explode(col("ws")).as("word"))
+
+  /** The gates' one stateful grouping key: (window(event_time), doc_id). */
+  private def docWindow(windowDur: String): Seq[Column] =
+    Seq(window(col("event_time"), windowDur), col("doc_id"))
 
   /** Streaming exact-quota weighted sampling — [[graft.ops.CorpusOps
     * .weightedSample]]'s stateful twin: each group holds its current
@@ -899,7 +889,7 @@ object EventStreams {
     val keyed = docs.select(col(groupCol).cast("string").as("g"),
         col(idCol).cast("long").as("id"),
         col(weightCol).cast("double").as("w"),
-        graft.ops.CorpusOps.esKey(idCol, weightCol, salt).as("skey"))
+        CO.esKey(idCol, weightCol, salt).as("skey"))
       .as[(String, Long, Double, Double)]
     keyed.groupByKey(_._1)
       .flatMapGroupsWithState[List[(Double, Long, Double)],
@@ -944,25 +934,20 @@ object EventStreams {
       labelCol: String = "lang", textCol: String = "text",
       windowDur: String = "10 minutes",
       watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
     val (wl, lab) = graft.ops.ClassifierOps.nbModel(train, labelCol, textCol)
     // labels-sized constants to the driver at stream setup (static side)
     val labArr = lab.orderBy(col("label")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     require(labArr.nonEmpty, "nbScoreStream: empty training set (no labels)")
-    val wordParts = docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"),
-        explode(TF.words(col(textCol))).as("w"))
+    val wordParts = watermarkedWords(docs, watermarkDelay, textCol)
+      .select(col("doc_id"), col("event_time"), explode(col("ws")).as("w"))
       .filter(length(col("w")) > 0)
       .join(wl, Seq("w")) // static; inner ⇒ OOV words drop (batch rule)
       .select(Seq(col("doc_id"), col("event_time")) ++
         labArr.zipWithIndex.map { case ((lbl, _, l0), i) =>
           coalesce(element_at(col("m"), lit(lbl)), lit(l0)).as(s"p_$i")
         }: _*)
-    val agged = wordParts
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"))
+    val agged = wordParts.groupBy(docWindow(windowDur): _*)
       .agg(count(lit(1)).as("n_tokens"),
         labArr.indices.map(i => sum(col(s"p_$i")).as(s"s_$i")): _*)
     // stateless post-agg argmax: max score, tie → smallest label (labArr
@@ -1003,16 +988,11 @@ object EventStreams {
   def boilerplateGateStream(docs: DataFrame, bpSet: DataFrame,
       block: Int = 4, windowDur: String = "10 minutes",
       watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    val toks = docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"),
-        TF.words(col("text")).as("ws"))
+    val toks = watermarkedWords(docs, watermarkDelay)
       .withColumn("n", size(col("ws")))
-    graft.ops.CorpusOps.blockFps(toks, block)
+    CO.blockFps(toks, block)
       .join(bpSet.select(col("fp"), lit(1L).as("__bp")), Seq("fp"), "left")
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"))
+      .groupBy(docWindow(windowDur): _*)
       .agg(count(lit(1)).as("n_blocks"),
         sum(when(col("__bp").isNotNull, 1L).otherwise(0L)).as("n_bp_blocks"),
         max(col("n")).cast("long").as("n_tokens"))
@@ -1045,7 +1025,6 @@ object EventStreams {
   def heavyCountStream(docs: DataFrame,
       candidates: Seq[String]): DataFrame = {
     require(candidates.nonEmpty, "heavyCountStream: empty candidate set")
-    val TF = graft.functions.TextFunctions
     val sp = docs.sparkSession
     import sp.implicits._
     val candDf = broadcast(candidates.toDF("word"))
@@ -1073,53 +1052,48 @@ object EventStreams {
     * watermark-bounded. */
   def cdcGateStream(docs: DataFrame, knownFps: DataFrame,
       modulus: Int = 8, windowDur: String = "10 minutes",
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    val toks = docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"),
-        TF.words(col("text")).as("ws"))
-    graft.ops.TextDedup.cdcChunkFps(toks, modulus)
+      watermarkDelay: String = "1 hour"): DataFrame =
+    knownChunkCounts(watermarkedWords(docs, watermarkDelay), knownFps,
+      modulus, docWindow(windowDur))
+
+  /** Known-chunk hit count: the content-defined chunks of a `ws` frame
+    * ([[graft.ops.TextDedup.cdcChunkFps]]) left-joined against a frozen
+    * chunk-fp set, rolled up per `keys` into (n_chunks,
+    * n_known_chunks) — shared by [[cdcGateStream]] and
+    * [[curateGateStream]]. */
+  private def knownChunkCounts(ws: DataFrame, knownFps: DataFrame,
+      modulus: Int, keys: Seq[Column]): DataFrame =
+    graft.ops.TextDedup.cdcChunkFps(ws, modulus)
       .join(knownFps.select(col("chunk_fp"), lit(1L).as("__known"))
         .distinct(), Seq("chunk_fp"), "left")
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"))
+      .groupBy(keys: _*)
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("__known").isNotNull, 1L).otherwise(0L))
           .as("n_known_chunks"))
-  }
 
   /** Streaming temperature-mixture gate — [[graft.ops.CorpusOps
     * .temperatureSample]]'s ingest twin under FROZEN rates
     * ([[graft.ops.CorpusOps.temperatureRates]] trains the (group,
-    * rate, thr) law batch-side on the historical corpus; one shared
-    * definition, so batch and stream can never drift): each incoming
-    * row joins its group's rate (stream-static equi join, never
-    * collected) and survives iff the SAME deterministic hash
-    * threshold passes. COMPLETELY STATELESS — membership is a pure
-    * function of (id, salt, frozen rates), so the stream admits
-    * exactly the rows the batch sampler would, in any ingest order
-    * (StreamingSpec pins it). Output: (id, group, rate). */
+    * rate, thr) law batch-side on the historical corpus): the same
+    * kernel, [[graft.ops.CorpusOps.mixKernel]], with the rates as a
+    * stream-static side (never collected). COMPLETELY STATELESS, so the
+    * stream admits exactly the rows the batch sampler would, in any
+    * ingest order. Output: (id, group, rate). */
   def mixGateStream(docs: DataFrame, rates: DataFrame,
       groupCol: String = "lang", idCol: String = "doc_id",
-      salt: String = "mix", resolution: Long = 1000000L): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    docs.join(rates, Seq(groupCol))
-      .filter(TF.hash60(col(idCol).cast("string"), s"$salt|") % resolution
-        < col("thr"))
-      .select(col(idCol), col(groupCol), round(col("rate"), 6).as("rate"))
-  }
+      salt: String = "mix", resolution: Long = 1000000L): DataFrame =
+    CO.mixKernel(docs, rates, groupCol, idCol, salt, resolution)
 
   /** Streaming PQ encode — ingest-time vector compression under a
     * FROZEN codebook ([[graft.ops.VectorOps.pqTrain]] runs once per
     * index generation batch-side; the stream pays encode only).
     * COMPLETELY STATELESS: each subspace's codebook rides in as a
     * typed literal (m·ksub entries), the per-row argmin is an
-    * `array_min` over (qd2, code) structs — the exact integer-
-    * quantized distance and (qd2 asc, code asc) tie-break
-    * [[graft.ops.VectorOps.pqAssign]] uses, so stream codes are
-    * digit-identical to the batch encode (StreamingSpec pins it). No
-    * watermark, no state store. Output: (vec_id, sub, code, qd2). */
+    * `array_min` over (qd2, code) structs — the distance kernel
+    * [[graft.ops.VectorOps.pqQd2]] and the (qd2 asc, code asc)
+    * tie-break [[graft.ops.VectorOps.pqAssign]] uses, so stream codes
+    * are digit-identical to the batch encode. No watermark, no state
+    * store. Output: (vec_id, sub, code, qd2). */
   def pqEncodeStream(vecs: DataFrame, cents: Seq[(Int, Long, Seq[Float])],
       m: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
@@ -1135,12 +1109,7 @@ object EventStreams {
       val sv = slice(col(vecCol), dsub * mi + 1, dsub)
       val entries = typedLit(bySub(mi))
       val best = array_min(transform(entries, c => struct(
-        round(aggregate(
-          zip_with(sv, c.getField("_2"), (x, y) =>
-            (x.cast("double") - y.cast("double")) *
-              (x.cast("double") - y.cast("double"))),
-          lit(0.0), (acc, v) => acc + v) * 1048576)
-          .cast("long").as("qd2"),
+        graft.ops.VectorOps.pqQd2(sv, c.getField("_2")).as("qd2"),
         c.getField("_1").as("code"))))
       struct(lit(mi).as("sub"), best.getField("code").as("code"),
         best.getField("qd2").as("qd2"))
@@ -1166,7 +1135,6 @@ object EventStreams {
   def logregScoreStream(docs: DataFrame, w: Seq[Long],
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(w.length == 4, s"logregScoreStream: want 4 weights, got $w")
-    val TF = graft.functions.TextFunctions
     val C = graft.ops.ClassifierOps
     docs
       .select(col(idCol).as("doc_id"), TF.words(col(textCol)).as("ws"))
@@ -1202,7 +1170,6 @@ object EventStreams {
       ids: Map[String, Int], unkId: Int = -1): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val TF = graft.functions.TextFunctions
     val rules = merges.sortBy(_.rank).map(m => (m.left, m.right)).toArray
     val bc = spark.sparkContext.broadcast((rules, ids))
     docs
@@ -1226,20 +1193,14 @@ object EventStreams {
   /** Streaming DSIR gate — [[graft.ops.CorpusOps.dsirWeights]] at
     * ingest time: each incoming document's mean per-token log
     * importance ratio under two FROZEN unigram models (target trained
-    * on the curated set, source on the historical pool — the
-    * train-once contract of [[lmScoreStream]], one model up). Both
-    * smoothing-constant pairs resolve once at stream setup; the two
-    * word-key joins run stream-static against the vocab-sized count
-    * tables; one watermarked windowed agg rolls tokens back to doc
-    * grain. Per-word micro-quantized logs and the integer mean are
-    * the batch op's exactly — the exploded per-token sum equals the
-    * batch (doc, word)-grain Σ tf·(lpwₜ−lpwₛ) because integer sums are
-    * order-free, so a doc's (n_tokens, log_ratio_q) is
-    * DIGIT-identical to its batch x83 row (StreamingSpec pins it).
-    * Route on log_ratio downstream: the ingest-time half of DSIR
-    * selection (the batch top-k/Gumbel selectors x84/x89 need the full
-    * pool; an ingest gate thresholds instead).
-    * Output: (window, doc_id, n_tokens, log_ratio_q).
+    * on the curated set, source on the historical pool), by the same
+    * kernel, [[graft.ops.CorpusOps.dsirKernel]], keyed (window, doc_id)
+    * with weight 1 per token. Both smoothing denominators resolve once
+    * at stream setup; the two word-key joins run stream-static against
+    * the vocab-sized count tables. Route on log_ratio downstream: the
+    * ingest-time half of DSIR selection (the batch top-k/Gumbel
+    * selectors x84/x89 need the full pool; an ingest gate thresholds
+    * instead). Output: (window, doc_id, n_tokens, log_ratio_q).
     *
     * Scale: state is (window, doc_id)-keyed and watermark-bounded; the
     * model tables join as static sides; AQE skew handling does not
@@ -1248,87 +1209,32 @@ object EventStreams {
   def dsirScoreStream(docs: DataFrame, targetCounts: DataFrame,
       sourceCounts: DataFrame, windowDur: String = "10 minutes",
       watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    def denomOf(c: DataFrame, what: String): Double = {
-      val r = c.agg(sum(col("cnt")).as("n"), count(lit(1)).as("v")).head
-      require(!r.isNullAt(0), s"dsirScoreStream: empty $what counts")
-      (r.getLong(0) + r.getLong(1)).toDouble
-    }
-    val dT = denomOf(targetCounts, "target")
-    val dS = denomOf(sourceCounts, "source")
-    def lpw(cnt: Column, denom: Double) =
-      graft.functions.ExactMath.microQ(
-        log((coalesce(cnt, lit(0L)) + 1).cast("double") / lit(denom)))
-    docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"),
-        explode(TF.words(col("text"))).as("word"))
-      .join(targetCounts.select(col("word"), col("cnt").as("cnt_t")),
-        Seq("word"), "left")
-      .join(sourceCounts.select(col("word"), col("cnt").as("cnt_s")),
-        Seq("word"), "left")
-      .withColumn("d", lpw(col("cnt_t"), dT) - lpw(col("cnt_s"), dS))
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        graft.functions.ExactMath.divHalfUpSigned(sum(col("d")),
-          count(lit(1)) * lit(100L)).as("log_ratio_q"))
+    def denom(c: DataFrame, what: String) =
+      CO.Denom.resolved(CO.unigramTotals(c), s"dsirScoreStream $what")
+    CO.dsirKernel(wordTokens(docs, watermarkDelay),
+      targetCounts, denom(targetCounts, "target"),
+      sourceCounts, denom(sourceCounts, "source"),
+      docWindow(windowDur), lit(1L))
   }
 
   /** Streaming Kneser–Ney scoring — [[graft.ops.CorpusOps
     * .knBigramApply]] at ingest time under the same frozen model (the
-    * bigram count table): all KN statistics derive from it once at
-    * stream setup; the three model joins run stream-static against
-    * bigram-vocab-sized tables, the two type totals resolve to
-    * literals, and one watermarked windowed agg rolls bigrams back to
-    * doc grain. The per-bigram log-probability expression — including
-    * the unseen-context continuation backoff — is the batch op's
-    * exactly, and the exploded per-occurrence sum equals the batch
-    * (doc, bigram)-grain Σ tf·lpb_q (integer sums are order-free),
-    * so a doc's (n_bigrams, avg_logp_kn_q) is DIGIT-identical to its
-    * batch x109 row (StreamingSpec pins it). Docs with <2 words emit
-    * no bigrams and drop from the output (the established OOV rule).
+    * bigram count table), by the same kernel,
+    * [[graft.ops.CorpusOps.knApplyKernel]], keyed (window, doc_id) with
+    * weight 1 per bigram occurrence: the three model joins run
+    * stream-static against bigram-vocab-sized tables and the two type
+    * totals resolve once at stream setup. Docs with <2 words emit no
+    * bigrams and drop from the output (the established OOV rule).
     * Output: (window, doc_id, n_bigrams, avg_logp_kn_q). */
   def knScoreStream(docs: DataFrame, counts: DataFrame,
       discount: Double = 0.75, windowDur: String = "10 minutes",
       watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    val cbx = counts
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      .withColumn("w2", substring_index(col("bg"), " ", -1))
-    val left = cbx.groupBy(col("w1"))
-      .agg(sum(col("cb")).as("cl"), count(lit(1)).as("n1f"))
-    val cont = cbx.groupBy(col("w2")).agg(count(lit(1)).as("n1p"))
-    val scal = cbx.agg(count(lit(1)).as("nb"),
-      countDistinct(col("w2")).as("vc")).head
-    require(scal.getLong(0) > 0, "knScoreStream: empty bigram model")
-    val denom = (scal.getLong(0) + scal.getLong(1)).toDouble
-    val pc = (coalesce(col("n1p"), lit(0L)) + 1).cast("double") / lit(denom)
-    val pSeen =
-      greatest(coalesce(col("cb"), lit(0L)).cast("double") - discount,
-        lit(0.0d)) / col("cl").cast("double") +
-      (lit(discount) * col("n1f").cast("double") /
-        col("cl").cast("double")) * pc
-    val ws = TF.words(col("text"))
-    docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col("event_time"), explode(zip_with(
-          slice(ws, lit(1), size(ws) - 1),
-          slice(ws, lit(2), size(ws) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("bg"))
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      .withColumn("w2", substring_index(col("bg"), " ", -1))
-      .join(cbx.select(col("bg"), col("cb")), Seq("bg"), "left")
-      .join(left, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .withColumn("lpb_q",
-        graft.functions.ExactMath.microQ(
-          log(when(col("cl").isNotNull, pSeen).otherwise(pc))))
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        graft.functions.ExactMath.divHalfUpSigned(sum(col("lpb_q")),
-          count(lit(1)) * lit(100L)).as("avg_logp_kn_q"))
+    val cbx = CO.bigramSides(counts)
+    CO.knApplyKernel(watermarkedWords(docs, watermarkDelay)
+        .select(col("doc_id"), col("event_time"),
+          explode(CO.bigrams(col("ws"))).as("bg")),
+      cbx, CO.Denom.resolved(CO.knTotals(cbx), "knScoreStream"), discount,
+      docWindow(windowDur), lit(1L))
   }
 
   /** Streaming one-call curation gate — [[graft.ops.CorpusOps
@@ -1342,10 +1248,8 @@ object EventStreams {
     *    The doc's entropy is computed STATELESSLY from its own token
     *    array via higher-order functions (per-doc word counts from
     *    array_distinct+filter — O(types·tokens) map work, no
-    *    word-grain stateful aggregation), with the IDENTICAL integer
-    *    arithmetic as [[graft.ops.CorpusOps.entropySignalFromWords]]:
-    *    micro-quantized logs, exact integer numerator, one IEEE
-    *    division by nw·69.31471805599453.
+    *    word-grain stateful aggregation) by the batch formula,
+    *    [[graft.ops.CorpusOps.entropyQ]].
     *  - 'uniform': every type equally frequent — exact, stateless.
     *  - 'dup_known_chunks': the doc's content-defined chunks
     *    ([[graft.ops.TextDedup.cdcChunkFps]], the one chunk
@@ -1355,8 +1259,8 @@ object EventStreams {
     *    static join is stateless; the rollup to doc grain is the ONE
     *    watermarked stateful agg.
     *  - 'mix_out': the frozen per-group hash thresholds
-    *    ([[graft.ops.CorpusOps.temperatureRates]] — mixGateStream's
-    *    contract); a group absent from the frozen rate table gates out
+    *    ([[graft.ops.CorpusOps.mixKeep]] — mixGateStream's contract); a
+    *    group absent from the frozen rate table gates out
     *    conservatively.
     * Output: (window, doc_id, <groupCol>, n_chunks, n_known_chunks,
     * reason).
@@ -1369,41 +1273,24 @@ object EventStreams {
       groupCol: String = "lang", salt: String = "mix",
       resolution: Long = 1000000L, windowDur: String = "10 minutes",
       watermarkDelay: String = "1 hour"): DataFrame = {
-    val TF = graft.functions.TextFunctions
-    val EM = graft.functions.ExactMath
-    val base = docs
-      .withColumn("event_time", eventTime(docs))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("doc_id"), col(groupCol).as("__grp"), col("event_time"),
-        TF.words(col("text")).as("ws"))
     val counts = transform(array_distinct(col("ws")),
       w => size(filter(col("ws"), x => x === w)).cast("long"))
-    val nW = size(col("ws")).cast("long")
-    val clcQ = aggregate(counts, lit(0L),
-      (acc, c) => acc + c * EM.microQ(log(c.cast("double"))))
-    val entQ = round((EM.microQ(log(nW.cast("double"))) * nW - clcQ)
-      .cast("double") / (nW.cast("double") * lit(69.31471805599453)))
-      .cast("long")
-    val inMix = TF.hash60(col("doc_id").cast("string"), s"$salt|") %
-      resolution < col("thr")
-    val flagged = base
+    val entQ = CO.entropyQ(size(col("ws")).cast("long"),
+      aggregate(counts, lit(0L), (acc, c) => acc + CO.clnTermQ(c)))
+    val flagged = watermarkedWords(docs, watermarkDelay,
+        extra = Seq(col(groupCol).as("__grp")))
       .withColumn("__low", entQ < lit(entropyCutQ))
       .withColumn("__uni", !col("__low") &&
         array_min(counts) === array_max(counts))
       .join(rates.select(col(groupCol).as("__grp"), col("thr")),
         Seq("__grp"), "left")
-      .withColumn("__inmix", coalesce(inMix, lit(false)))
+      .withColumn("__inmix",
+        coalesce(CO.mixKeep(col("doc_id"), salt, resolution), lit(false)))
       .drop("thr")
-    graft.ops.TextDedup.cdcChunkFps(flagged, cdcModulus)
-      .join(knownFps.select(col("chunk_fp"), lit(1L).as("__known"))
-        .distinct(), Seq("chunk_fp"), "left")
-      // the flag columns are constant per doc — carrying them as GROUP
-      // KEYS keeps the agg a plain hash agg with no first()/max() games
-      .groupBy(window(col("event_time"), windowDur), col("doc_id"),
-        col("__grp"), col("__low"), col("__uni"), col("__inmix"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("__known").isNotNull, 1L).otherwise(0L))
-          .as("n_known_chunks"))
+    // the flag columns are constant per doc — carrying them as GROUP
+    // KEYS keeps the agg a plain hash agg with no first()/max() games
+    knownChunkCounts(flagged, knownFps, cdcModulus, docWindow(windowDur) ++
+        Seq(col("__grp"), col("__low"), col("__uni"), col("__inmix")))
       .select(col("window"), col("doc_id"), col("__grp").as(groupCol),
         col("n_chunks"), col("n_known_chunks"),
         when(col("__low"), lit("low_entropy"))

@@ -68,11 +68,8 @@ class MediaPipelineSpec extends SparkTestBase {
     }
   }
 
-  test("resizeStub truncates payloads; sampleFrames strides frames") {
+  test("sampleFrames strides frames") {
     val withM = MediaPipeline.withPayload(docs, "text")
-    val resized = MediaPipeline.resizeStub(withM, maxBytes = 4)
-    val lens = resized.select(length(col("media"))).distinct().collect().map(_.getInt(0))
-    assert(lens.toSeq == Seq(4))
     val framed = MediaPipeline.sampleFrames(withM, frameBytes = 4, stride = 2)
     val n = framed.select(size(col("frames"))).distinct().collect().map(_.getInt(0))
     // 16 bytes / 4 = 4 frames (indices 0..3), stride 2 keeps 0 and 2

@@ -1145,6 +1145,8 @@ class OpsSpec extends SparkTestBase {
       // per consumer). Construction therefore RUNS jobs now — pin it.
       graft.ops.CorpusOps.bigramLmScore(docs)
       graft.ops.CorpusOps.lmScores(docs)
+      val d0 = System.currentTimeMillis + 5000
+      while (jobs == 0 && System.currentTimeMillis < d0) Thread.sleep(100)
       assert(jobs > 0,
         "the LM scorers' r18 eager small-table barriers must " +
           "materialize at construction (shared-grain contract)")
@@ -2564,6 +2566,24 @@ class OpsSpec extends SparkTestBase {
       Seq((4L, "dd ee")).toDF("doc_id", "text"))
     assert(cat.shouldCompactBucketed("post", maxFilesPerBucket = 1))
     assert(!cat.shouldCompactBucketed("post", maxFilesPerBucket = 100))
+  }
+
+  test("Catalog.compactBucketed: rows appended from another session survive compaction") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_xsession").toString
+    val cat = graft.catalog.Catalog(spark, dir)
+    try {
+      cat.writeBucketed("t", spark.range(0, 10).toDF("id"), 2, Seq("id"))
+      assert(cat.bucketedTable("t").count() == 10L) // lists the files here
+      val other = spark.newSession()
+      graft.catalog.Catalog(other, dir)
+        .appendBucketed("t", other.range(10, 20).toDF("id"))
+      cat.compactBucketed("t")
+      assert(cat.bucketedTable("t").count() == 20L)
+    } finally {
+      cat.dropBucketed("t")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("CorpusOps.searchScoredPostingsPerQuery: probe-vocabulary cap fails loudly, never OOMs the driver") {
