@@ -161,17 +161,14 @@ final case class Catalog(spark: SparkSession, dir: String) {
     * compacted log ([[graft.mvcc.LogTable.compact]] — keep-newest-
     * committed, drop tombstoned/aborted history, preserve in-flight and
     * future entries verbatim), stage it into a sibling directory, then
-    * swap it in (old dir moved aside, staging renamed to the table
-    * path, old dir deleted). The staging write fully materializes the
-    * compacted rows BEFORE anything touches the live directory, so a
-    * crash during the write leaves the table untouched; the swap itself
-    * is two renames — a crash between them leaves the table absent but
-    * both generations on disk (`<name>.parquet.old`, recoverable by
-    * hand), never a half-written mix. Like the reference's compaction,
-    * the job assumes EXCLUSIVE WRITE ACCESS to the table (concurrent
-    * appends during the swap would land in the doomed old directory);
-    * concurrent READERS of an already-opened DataFrame may need to
-    * re-open after the swap (parquet scans resolve files lazily).
+    * swap it in with [[publish]]. The staging write fully materializes
+    * the compacted rows BEFORE anything touches the live directory, so
+    * a crash during the write leaves the table untouched. Like the
+    * reference's compaction, the job assumes EXCLUSIVE WRITE ACCESS to
+    * the table (concurrent appends during the swap would land in the
+    * doomed old directory); concurrent READERS of an already-opened
+    * DataFrame may need to re-open after the swap (parquet scans resolve
+    * files lazily).
     * Returns the number of reclaimed log entries. */
   def compactLog(name: String, asOf: Long): Long = {
     // single-writer guard: atomic create (overwrite=false) — exactly
@@ -181,6 +178,7 @@ final case class Catalog(spark: SparkSession, dir: String) {
     // (and on failure — the documented crash-recovery states are
     // unchanged; a crashed JVM leaves a stale sentinel to delete by
     // hand along with the `.old`/stage remnants it already documents).
+    require(exists(name), s"collection '$name' does not exist")
     val sentinel = compactSentinel(name)
     val acquired =
       try { fs.create(sentinel, false).close(); true }
@@ -188,33 +186,38 @@ final case class Catalog(spark: SparkSession, dir: String) {
     if (!acquired) throw new IllegalStateException(
       s"compactLog('$name') rejected: another compaction holds $sentinel")
     // release the sentinel on success and on any failure that leaves
-    // the LIVE directory intact; if the crash window between the two
+    // the LIVE directory in place; if the crash window between the two
     // renames hit (live moved aside, publish failed), KEEP it — an
     // append against the missing live dir would silently recreate an
     // empty table, which is exactly the state the guard exists to
     // block. Recovery: restore `<name>.parquet` from `.old` by hand,
     // then delete the sentinel.
-    var liveIntact = true
     try {
-      val cols = table(name).columns
-      val before = table(name).count()
-      val compacted = graft.mvcc.LogTable.compact(table(name), asOf)
-        .select(cols.map(c => col(c)): _*)
+      val log = table(name)
+      val before = log.count()
       val staging = new HPath(s"${path(name)}.compact-stage")
-      val old = new HPath(s"${path(name)}.old")
-      fs.delete(staging, true); fs.delete(old, true)
-      compacted.write.parquet(staging.toString)
+      fs.delete(staging, true)
+      graft.mvcc.LogTable.compact(log, asOf).write.parquet(staging.toString)
       val after = spark.read.parquet(staging.toString).count()
-      val live = new HPath(path(name))
-      require(fs.rename(live, old), s"compactLog: could not move $live aside")
-      liveIntact = false
-      require(fs.rename(staging, live),
-        s"compactLog: could not publish $staging (old data at $old; " +
-          s"sentinel $sentinel kept — restore by hand, then remove it)")
-      liveIntact = true
-      fs.delete(old, true)
+      publish(name, staging, "compactLog")
       before - after
-    } finally if (liveIntact) fs.delete(sentinel, false)
+    } finally if (exists(name)) fs.delete(sentinel, false)
+  }
+
+  /** Swap a fully written `staging` directory in as `name`'s live
+    * directory: the live dir is moved aside to `<path>.old`, the staging
+    * renamed to the table path, then the old data deleted. Readers never
+    * see a partial table; a crash between the two renames leaves the
+    * table absent but the old data recoverable at `<path>.old`, never a
+    * half-written mix. `op` names the caller in the failure messages. */
+  private def publish(name: String, staging: HPath, op: String): Unit = {
+    val live = new HPath(path(name))
+    val old = new HPath(s"${path(name)}.old")
+    fs.delete(old, true)
+    require(fs.rename(live, old), s"$op: could not move $live aside")
+    require(fs.rename(staging, live),
+      s"$op: could not publish $staging (old data at $old)")
+    fs.delete(old, true)
   }
 
   /** Hive-style partitioned write — the working analogue of the
@@ -386,23 +389,15 @@ final case class Catalog(spark: SparkSession, dir: String) {
     * partitions, so each write task holds one bucket and the compacted
     * table is one file per bucket.
     *
-    * Publish is by directory swap (same pattern as [[compactLog]]):
-    * the compacted copy is staged as a sibling directory, the live dir
-    * moved aside, the staging renamed in, then the old data deleted —
-    * readers never see a partial table, and a crash between the two
-    * renames leaves the old data recoverable at `<path>.old`. The
-    * sidecar travels inside the staged directory, so the cross-session
-    * restore contract is never stale. Returns files-before −
-    * files-after. */
+    * The compacted copy is staged as a sibling directory and swapped in
+    * by [[publish]]. The sidecar travels inside the staged directory,
+    * so the cross-session restore contract is never stale. Returns
+    * files-before − files-after. */
   def compactBucketed(name: String): Int = {
     val spec = readBucketSpec(name).getOrElse(throw new IllegalStateException(
       s"no bucket sidecar for '$name' — nothing to compact"))
     val before = dataFileCount(name)
-    // Spark caches a table's file listing per session: rows another
-    // session appended since this one listed the files (a stream's
-    // cloned session) would be silently dropped by the rewrite
-    val qn = bucketedName(name)
-    if (spark.catalog.tableExists(qn)) spark.catalog.refreshTable(qn)
+    refreshBucketed(name)
     val stagingCat = Catalog(spark, s"$dir/.compact_$name")
     fs.delete(new HPath(stagingCat.dir), true)
     // tombstone-aware: compaction is where recorded deletes become
@@ -414,13 +409,7 @@ final case class Catalog(spark: SparkSession, dir: String) {
       spec.buckets, spec.bucketCols, spec.sortCols)
     stagingCat.dropBucketed(name) // staging registration, never served
     dropBucketed(name) // re-registered from the swapped-in sidecar on next read
-    val live = new HPath(path(name))
-    val old = new HPath(s"${path(name)}.old")
-    fs.delete(old, true)
-    require(fs.rename(live, old), s"compactBucketed: could not move $live aside")
-    require(fs.rename(new HPath(stagingCat.path(name)), live),
-      s"compactBucketed: could not publish staging (old data at $old)")
-    fs.delete(old, true)
+    publish(name, new HPath(stagingCat.path(name)), "compactBucketed")
     fs.delete(new HPath(stagingCat.dir), true)
     if (hasTombstones(name)) drop(tombstoneName(name))
     before - dataFileCount(name)
@@ -589,10 +578,8 @@ final case class Catalog(spark: SparkSession, dir: String) {
 
   /** Rewrite a PLAIN (non-bucketed) table without its tombstoned rows
     * and drop the sidecar — the compact job for un-bucketed index
-    * tables (PQ codes). Publishes by the same staged-directory swap as
-    * [[compactBucketed]]: readers never see a partial table, and a
-    * crash between the renames leaves the old data at `<path>.old`.
-    * Returns the number of rows removed; no-op (0) without a sidecar.
+    * tables (PQ codes), staged and swapped in by [[publish]]. Returns
+    * the number of rows removed; no-op (0) without a sidecar.
     * Single-writer: concurrent appends during the rewrite follow the
     * same caveat as [[append]]+[[compactLog]]. */
   def rewriteExcludingTombstones(name: String): Long = {
@@ -602,14 +589,7 @@ final case class Catalog(spark: SparkSession, dir: String) {
     fs.delete(new HPath(staging), true)
     minusTombstones(name, table(name))
       .write.mode("overwrite").parquet(staging)
-    val live = new HPath(path(name))
-    val old = new HPath(s"${path(name)}.old")
-    fs.delete(old, true)
-    require(fs.rename(live, old),
-      s"rewriteExcludingTombstones: could not move $live aside")
-    require(fs.rename(new HPath(staging), live),
-      s"rewriteExcludingTombstones: could not publish (old data at $old)")
-    fs.delete(old, true)
+    publish(name, new HPath(staging), "rewriteExcludingTombstones")
     drop(tombstoneName(name))
     before - table(name).count()
   }
@@ -633,21 +613,13 @@ final case class Catalog(spark: SparkSession, dir: String) {
       // so a later at-least-once replay of an already-committed batch
       // would pass the hwm guard and re-append its rows — the exact
       // duplication the hwm exists to prevent, introduced by the
-      // maintenance op itself. Same discipline as [[compactBucketed]] /
-      // [[rewriteExcludingTombstones]]: the only crash window is
+      // maintenance op itself. [[publish]]'s only crash window is
       // between the two renames, which leaves the old marker intact at
       // `<path>.old` instead of gone.
       val staging = s"$dir/.collapse_$name"
       fs.delete(new HPath(staging), true)
       one.coalesce(1).write.mode("overwrite").parquet(staging)
-      val live = new HPath(path(name))
-      val old = new HPath(s"${path(name)}.old")
-      fs.delete(old, true)
-      require(fs.rename(live, old),
-        s"collapseHwm: could not move $live aside")
-      require(fs.rename(new HPath(staging), live),
-        s"collapseHwm: could not publish (old marker at $old)")
-      fs.delete(old, true)
+      publish(name, new HPath(staging), "collapseHwm")
     }
   }
 
@@ -761,6 +733,16 @@ final case class Catalog(spark: SparkSession, dir: String) {
         "— stale or foreign registration; re-run writeBucketed")
     spark.table(qn)
   }
+
+  /** Drop this session's cached file listing of bucketed `name`. Spark
+    * caches a table's resolved relation, listing included, per session,
+    * so a long-lived session (a stream's cloned session) would miss rows
+    * another session appended since, and would fail to open files a
+    * compaction replaced. The next read lists the directory afresh.
+    * Writers that read the table call this first; probes do not. */
+  private[graft] def refreshBucketed(name: String): Unit =
+    spark.sessionState.catalog.invalidateCachedTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(bucketedName(name)))
 
   /** Drop a bucketed table's session-catalog registration (the data —
     * including the bucket-spec sidecar, so a later session can still

@@ -43,10 +43,9 @@ object GraftSession {
       // collapsed to 1–5 tasks with 31 cores idle). 64 KB keeps such
       // stages parallel while still folding genuinely empty partitions.
       // At healthy scale shuffles are orders of magnitude above either
-      // bound, so production plans are unchanged; env-overridable for
-      // A/B and cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
+      // bound, so production plans are unchanged. A session can still
+      // set the SQL conf at runtime for an A/B or cluster tuning.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -22,16 +22,18 @@ import org.apache.spark.sql.functions._
   *   - payload columns (arbitrary; null on "C"/"R"/"D" rows)
   *
   * A transaction carries at most one of C/R (exclusive by contract, as in
-  * the reference where a txn's final log record is one TransactionEntry).
+  * the reference where a txn's final log record is one TransactionEntry;
+  * a txn that breaks it by carrying both is treated as rolled back).
   *
-  * Scale notes (100 TB): the only shuffle is the per-rid window in
-  * [[snapshot]] — the unavoidable "newest version per key" exchange. The
-  * committed/rolled-back txn sets are tiny (one row per transaction) and
-  * broadcast. Compaction rewrites the settled prefix of the log as its
-  * own snapshot — keep-newest-committed/drop-tombstones — and drops
-  * aborted versions eagerly (possible *because* the R marker is
-  * explicit; marker-absence alone can't distinguish aborted from
-  * in-flight).
+  * Scale notes (100 TB): [[snapshot]], [[compact]] and [[redundancyRatio]]
+  * are filters over one settlement pass ([[settle]]). Its only shuffle is
+  * the per-rid window — the unavoidable "newest version per key"
+  * exchange. The per-txn status aggregate is tiny (one row per
+  * transaction) and joins the log once, as a broadcast. Compaction
+  * rewrites the settled prefix of the log as its own snapshot —
+  * keep-newest-committed/drop-tombstones — and drops aborted versions
+  * eagerly (possible *because* the R marker is explicit; marker-absence
+  * alone can't distinguish aborted from in-flight).
   */
 object LogTable {
 
@@ -50,24 +52,45 @@ object LogTable {
   def rolledBackTxns(log: DataFrame): DataFrame =
     log.filter(col("op") === Rollback).select("txn").distinct()
 
+  private val isData = col("op").isin(Upsert, Delete)
+
+  /** The settlement pass every operation below filters: each log entry
+    * (in the log's own column order) tagged with
+    *   - `__settled` — its txn committed at `asOf` and was not rolled back;
+    *   - `__pending` — its txn is neither committed at `asOf` nor rolled
+    *     back (in-flight, or committed only after `asOf`);
+    *   - `__newest`  — it is its rid's newest settled data entry;
+    *   - `__minPending` — the lowest pending data txn of its rid.
+    * "Newest" orders by txn desc, then op asc: when one txn carries both
+    * an upsert and a tombstone for the same rid, "D" < "U", so the
+    * tombstone wins — never a partition-order-dependent outcome. */
+  private def settle(log: DataFrame, asOf: Long): DataFrame = {
+    val status = log.filter(col("op").isin(Commit, Rollback)).groupBy("txn")
+      .agg(max(col("op") === Commit && col("txn") <= asOf).as("__committed"),
+        max(col("op") === Rollback).as("__rolledBack"))
+    val committed = coalesce(col("__committed"), lit(false))
+    val rolledBack = coalesce(col("__rolledBack"), lit(false))
+    val tagged = log.join(broadcast(status), Seq("txn"), "left")
+      .select(log.columns.map(col) :+
+        (committed && !rolledBack).as("__settled") :+
+        (!committed && !rolledBack).as("__pending"): _*)
+    val newestSettledFirst = Window.partitionBy("rid").orderBy(
+      (isData && col("__settled")).desc, col("txn").desc, col("op").asc)
+    tagged.select(col("*"),
+      (row_number().over(newestSettledFirst) === 1 && isData && col("__settled"))
+        .as("__newest"),
+      min(when(isData && col("__pending"), col("txn"))).over(newestSettledFirst
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .as("__minPending"))
+  }
+
   /** Snapshot visible at transaction `asOf`: newest committed version per
     * rid, tombstones suppress older versions (reference
     * table_scan.rs:65-123 backward-scan visibility, as a window).
     */
-  def snapshot(log: DataFrame, asOf: Long): DataFrame = {
-    val vis = log
-      .filter(col("op").isin(Upsert, Delete) && col("txn") <= asOf)
-      .join(broadcast(committedTxns(log, asOf)), Seq("txn"), "left_semi")
-    // deterministic tie-break when one txn carries both an upsert and a
-    // tombstone for the same rid: "D" < "U", so the tombstone wins —
-    // never a partition-order-dependent outcome
-    val newestFirst = Window.partitionBy("rid")
-      .orderBy(col("txn").desc, col("op").asc)
-    vis
-      .withColumn("__rn", row_number().over(newestFirst))
-      .filter(col("__rn") === 1 && col("op") === Upsert)
-      .drop("__rn", "op")
-  }
+  def snapshot(log: DataFrame, asOf: Long): DataFrame =
+    settle(log, asOf).filter(col("__newest") && col("op") === Upsert)
+      .select(log.columns.filterNot(_ == "op").map(col): _*)
 
   /** Compaction (reference log_compaction.rs:9-64): rewrite the settled
     * prefix (committed, txn ≤ `asOf`) as its snapshot — one Upsert per
@@ -77,39 +100,21 @@ object LogTable {
     * marker — the abort is final at any snapshot point); in-flight and
     * future (txn > asOf) entries are preserved verbatim, so a
     * still-running transaction can commit after a compaction pass.
+    * A settled tombstone SURVIVES when a preserved pending entry for the
+    * same rid has a lower txn: dropping it would resurrect the deleted
+    * row once that in-flight txn commits (the tombstone is what shadows
+    * it). The output keeps the log's columns, in its order.
     *
     * Invariant (LogTableSpec): for every t,
     * snapshot(compact(log, asOf), t) == snapshot(log, t) whenever t ≥
     * the compacted prefix's settled point or t ≤ asOf.
     */
-  def compact(log: DataFrame, asOf: Long): DataFrame = {
-    val keptTxns = log.join(broadcast(rolledBackTxns(log)), Seq("txn"), "left_anti")
-    val live = snapshot(keptTxns, asOf).withColumn("op", lit(Upsert))
-    val markers = keptTxns.filter(col("op") === Commit && col("txn") <= asOf)
-    // not settled at asOf: in-flight (no marker yet) or txn > asOf
-    val pending = keptTxns
-      .join(broadcast(committedTxns(keptTxns, asOf)), Seq("txn"), "left_anti")
-    // a settled tombstone must SURVIVE compaction when a preserved
-    // pending entry for the same rid has a lower txn: dropping it would
-    // resurrect the deleted row once that in-flight txn commits (the
-    // tombstone is what shadows it). Kept as its original D entry.
-    val newestFirst = Window.partitionBy("rid")
-      .orderBy(col("txn").desc, col("op").asc)
-    val settledNewest = keptTxns
-      .filter(col("op").isin(Upsert, Delete) && col("txn") <= asOf)
-      .join(broadcast(committedTxns(keptTxns, asOf)), Seq("txn"), "left_semi")
-      .withColumn("__rn", row_number().over(newestFirst))
-      .filter(col("__rn") === 1 && col("op") === Delete)
-      .drop("__rn")
-    val shadowTombstones = settledNewest.as("t")
-      .join(pending.filter(col("op").isin(Upsert, Delete))
-        .select(col("rid").as("p_rid"), col("txn").as("p_txn")).as("p"),
-        col("t.rid") === col("p_rid") && col("p_txn") < col("t.txn"),
-        "left_semi")
-    live.unionByName(markers, allowMissingColumns = true)
-      .unionByName(pending, allowMissingColumns = true)
-      .unionByName(shadowTombstones, allowMissingColumns = true)
-  }
+  def compact(log: DataFrame, asOf: Long): DataFrame =
+    settle(log, asOf)
+      .filter((col("__newest") &&
+          (col("op") === Upsert || col("__minPending") < col("txn"))) ||
+        (col("op") === Commit && col("__settled")) || col("__pending"))
+      .select(log.columns.map(col): _*)
 
   /** Redundancy statistics — the compact-when signal (reference
     * CollectionStatistics::should_compact,
@@ -119,17 +124,16 @@ object LogTable {
     * rows. In-flight (unmarked) transactions are excluded from the
     * denominator — compaction preserves them verbatim, so counting them
     * as redundant would make a compact-when-signaled loop re-trigger
-    * forever while reclaiming nothing. Two count() probes — a
+    * forever while reclaiming nothing. One aggregate job — a
     * driver-side control decision like the reference's counters, not a
     * data-plane collect.
     */
   def redundancyRatio(log: DataFrame, asOf: Long): Double = {
-    val settledTxns = committedTxns(log, asOf).unionByName(rolledBackTxns(log))
-    val settled = log.filter(col("op").isin(Upsert, Delete))
-      .join(broadcast(settledTxns.distinct()), Seq("txn"), "left_semi")
-      .count()
-    if (settled == 0) 0.0
-    else 1.0 - snapshot(log, asOf).count().toDouble / settled
+    val r = settle(log, asOf).agg(
+      count(when(isData && !col("__pending"), true)),
+      count(when(col("__newest") && col("op") === Upsert, true))).head()
+    val settled = r.getLong(0)
+    if (settled == 0) 0.0 else 1.0 - r.getLong(1).toDouble / settled
   }
 
   def shouldCompact(log: DataFrame, asOf: Long, redundancyThreshold: Double): Boolean =

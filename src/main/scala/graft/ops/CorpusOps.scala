@@ -1550,6 +1550,7 @@ object CorpusOps {
     // dl per LIVE doc from its own posting rows (max = the dl every row
     // of the doc's serving generation carries; the gen-filtered view
     // already excludes dead generations); one deletes-sized aggregate
+    cat.refreshBucketed(name)
     val live = cat.minusTombstones(name, cat.bucketedTable(name))
     val gone = live
       .join(broadcast(want), Seq("doc_id"))

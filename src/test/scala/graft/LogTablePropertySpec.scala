@@ -92,6 +92,33 @@ class LogTablePropertySpec extends SparkTestBase {
     }
   }
 
+  test("redundancyRatio equals a driver-side count of settled and live entries (random logs)") {
+    for (seed <- 1L to 6L) {
+      val log = randomLog(seed)
+      val rows = log.select("txn", "op", "rid").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.get(2)))
+      val rolled = rows.collect { case (t, LogTable.Rollback, _) => t }.toSet
+      val data = rows.collect {
+        case (t, op, rid: Long) if op == LogTable.Upsert || op == LogTable.Delete =>
+          (t, op, rid)
+      }
+      for (asOf <- Seq(0L, 2L, 5L, 8L)) {
+        val committed =
+          rows.collect { case (t, LogTable.Commit, _) if t <= asOf => t }.toSet
+        val settled = data.count { case (t, _, _) => committed(t) || rolled(t) }
+        // newest committed entry per rid; "D" < "U" breaks a txn tie
+        val live = data.filter { case (t, _, _) => committed(t) }
+          .groupBy(_._3).values
+          .count(_.maxBy { case (t, op, _) => (t, op == LogTable.Delete) }._2 ==
+            LogTable.Upsert)
+        val expected = if (settled == 0) 0.0 else 1.0 - live.toDouble / settled
+        val got = LogTable.redundancyRatio(log, asOf)
+        assert(math.abs(got - expected) < 1e-9,
+          s"seed=$seed asOf=$asOf ratio $got, expected $expected")
+      }
+    }
+  }
+
   test("compaction leaves no trace of rolled-back transactions (random logs)") {
     for (seed <- 1L to 6L) {
       val log = randomLog(seed)

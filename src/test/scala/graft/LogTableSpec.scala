@@ -139,6 +139,15 @@ class LogTableSpec extends SparkTestBase {
     assert(!LogTable.shouldCompact(LogTable.compact(logRolledBack, 4L), 4L, 0.5))
   }
 
+  test("compact reads each of the input log's leaf relations at most twice") {
+    // one settlement pass: the per-txn status aggregate and the ranked
+    // frame are the only two reads; the plan must not grow per filter
+    val leaves = LogTable.compact(log, 4L).queryExecution.analyzed.collectLeaves()
+    val reads = log.queryExecution.analyzed.collectLeaves()
+      .map(leaf => leaves.count(_.sameResult(leaf)))
+    assert(reads.max <= 2, s"log leaves read ${reads.mkString(",")} times")
+  }
+
   test("durable log round-trip: append batches on disk, reopen in a second session, compact as a maintenance rewrite (log_compaction.rs:9-64)") {
     // The reference's compaction is an ON-DISK operation; this exercises
     // the full composition the recipe tests above only stage in memory:

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BRound, Cast, Expression, ExprId, Round}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
 
 /** Determinism audit for the round-12 failure class: a value produced
@@ -52,13 +53,16 @@ class RoundingAuditSpec extends SparkTestBase {
     case _ => false
   }
 
+  /** Every registered query's analyzed plan, built once and shared by
+    * both sweeps below (building all queries dominates this suite). */
+  private lazy val analyzed: Seq[(String, LogicalPlan)] =
+    SparkEntry.queries.keys.toSeq.sorted.map(name =>
+      name -> SparkEntry.queries(name)(spark, sf).queryExecution.analyzed)
+
   test("no unaudited round(double, n) -> DECIMAL anywhere in any registered query plan") {
-    val flagged = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.analyzed
-      var hit = false
-      plan.foreach(node =>
-        node.expressions.foreach(_.foreach(e => if (fragile(e)) hit = true)))
-      hit
+    val flagged = analyzed.collect {
+      case (name, plan) if plan.exists(_.expressions.exists(_.exists(fragile))) =>
+        name
     }
     val unaudited = flagged.filterNot(allowlisted.contains)
     val stale = allowlisted.keySet -- flagged
@@ -126,9 +130,7 @@ class RoundingAuditSpec extends SparkTestBase {
     * through the whole plan (project → aggregate → join inputs …), so
     * a round computed three operators below the final projection is
     * still attributed to the output column it feeds. */
-  private def outputCarriesRound(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Boolean = {
+  private def outputCarriesRound(plan: LogicalPlan): Boolean = {
     val aliases: Map[ExprId, Expression] =
       plan.collect { case p => p }
         .flatMap(_.expressions.flatMap(_.collect {
@@ -152,9 +154,8 @@ class RoundingAuditSpec extends SparkTestBase {
   }
 
   test("no unaudited round(double) feeding any OUTPUT column of any registered query") {
-    val flagged = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-      outputCarriesRound(
-        SparkEntry.queries(name)(spark, sf).queryExecution.analyzed)
+    val flagged = analyzed.collect {
+      case (name, plan) if outputCarriesRound(plan) => name
     }
     val unaudited = flagged.filterNot(outputAllowlisted.contains)
     val stale = outputAllowlisted -- flagged

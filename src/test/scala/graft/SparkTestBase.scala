@@ -19,10 +19,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Storage sweep between suites — the same hygiene graft.Bench applies
     * between reps: localCheckpoint blocks are PINNED (no lineage), so
-    * across a full run the shared session accumulates hundreds of dead
-    * blocks, and late suites degrade ~10× (LogTableSpec: 2m20s alone vs
-    * ~20m at the tail of a full `sbt test`). Every suite builds its
-    * frames from scratch, so nothing cached is live across suites.
+    * across a full run the shared session would accumulate hundreds of
+    * dead blocks and slow the late suites many-fold. Every suite builds
+    * its frames from scratch, so nothing cached is live across suites.
     */
   override def afterAll(): Unit = {
     try {

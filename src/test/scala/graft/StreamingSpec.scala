@@ -577,6 +577,52 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("scored-postings delete stream: one long-running stream applies deletes across an append and a compaction") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions.col
+    val dd = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text")
+    val ids = dd.select("doc_id").as[Long].collect().toSeq
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-spdelete").toString
+    val cat = graft.catalog.Catalog(spark, s"$dir/idx")
+    val terms = Seq("spark", "join", "window")
+    def res(c: graft.catalog.Catalog) =
+      graft.ops.CorpusOps.searchScoredPostings(c, "spost", terms, k = 25)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    def rebuilt(tag: String, keep: org.apache.spark.sql.Column) = {
+      val c = graft.catalog.Catalog(spark, s"$dir/rebuilt_$tag")
+      graft.ops.CorpusOps.writeScoredPostings(c, "spost", dd.filter(keep))
+      res(c)
+    }
+    graft.ops.CorpusOps.writeScoredPostings(cat, "spost",
+      dd.filter(col("doc_id") % 2 === 0))
+    val delInput = MemoryStream[Long]
+    val dq = EventStreams.scoredPostingsDeleteStream(
+      delInput.toDF().toDF("doc_id"), s"$dir/idx", "spost", s"$dir/delckpt")
+    try {
+      // the stream's session lists the index files on its first batch
+      delInput.addData(ids.filter(_ % 10 == 0): _*); dq.processAllAvailable()
+      // odd docs appended from this session; deletes fed next hit only them
+      graft.ops.CorpusOps.appendToScoredPostings(cat, "spost",
+        dd.filter(col("doc_id") % 2 =!= 0))
+      delInput.addData(ids.filter(_ % 10 == 5): _*); dq.processAllAvailable()
+      assert(dq.isActive, "delete stream died after an append")
+      assert(res(cat) == rebuilt("append", col("doc_id") % 5 =!= 0),
+        "deletes of appended rows diverged from the kept-corpus rebuild")
+      // compaction replaces every index file the stream listed
+      graft.ops.CorpusOps.compactScoredPostings(cat, "spost")
+      delInput.addData(ids.filter(_ % 10 == 3): _*); dq.processAllAvailable()
+      assert(dq.isActive, "delete stream died after a compaction")
+      assert(res(cat) ==
+        rebuilt("compact", col("doc_id") % 5 =!= 0 && col("doc_id") % 10 =!= 3),
+        "deletes after compaction diverged from the kept-corpus rebuild")
+    } finally {
+      dq.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("positional-index ingest stream: phrase and proximity search after N micro-batches equal the one-shot batch build; replay is a no-op") {
     implicit val sqlCtx = spark.sqlContext
     val dd = spark.read.parquet(s"$sf/documents.parquet")
