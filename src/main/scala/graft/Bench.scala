@@ -231,8 +231,8 @@ object Bench {
     // plans fine"; control_ratio≈1 with outliers reads "these specific
     // queries regressed" — either way no re-run is needed to tell which.
     // Both fields are ALWAYS present (BenchContractSpec pins that); -1
-    // means not comparable (no reference record, different sf, subset
-    // run without the control).
+    // means not comparable (no reference record, different sf or core
+    // count, subset run without the control).
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
       "tools/bench_reference.json")
     val (controlRatio, overBand): (Double, Seq[String]) = try {
@@ -240,11 +240,13 @@ object Bench {
       val node = om.readTree(java.nio.file.Files.readString(
         java.nio.file.Paths.get(refPath)))
       val refSf = node.get("sf").asText()
+      val refCpus = node.get("cpus").asInt
       val control = node.get("control").asText()
       val refQ = node.get("queries")
       val cr = results.collectFirst {
         case (k, Right(m)) if k == control && refSf == sfShort &&
-          refQ.has(k) && refQ.get(k).asDouble > 0 => m / refQ.get(k).asDouble
+          refCpus == cpus.toInt && refQ.has(k) &&
+          refQ.get(k).asDouble > 0 => m / refQ.get(k).asDouble
       }.getOrElse(-1.0)
       val over =
         if (cr <= 0) Seq.empty[String]
@@ -304,7 +306,7 @@ object Bench {
       val overBandFull =
         overBand.map("\"" + _ + "\"").mkString("[", ",", "]")
       val fullLine =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"errors":$errs,"n_failed":$nFailed,"reps":$reps,"warmup_sec":$warmupSec,"calib_every":$calibEvery,"calib_sec":[${calibAll.mkString(",")}],"sweep":${if (sweepOn) 1 else 0},"storage_after":$storageFull,"precached_max":$preCachedMax,"control_ratio":$controlRatio,"n_over_band":$nOverBand,"over_band":$overBandFull,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"errors":$errs,"n_failed":$nFailed,"reps":$reps,"warmup_sec":$warmupSec,"calib_every":$calibEvery,"calib_sec":[${calibAll.mkString(",")}],"sweep":${if (sweepOn) 1 else 0},"storage_after":$storageFull,"precached_max":$preCachedMax,"control_ratio":$controlRatio,"n_over_band":$nOverBand,"over_band":$overBandFull,"sf":"$sfDir","cpus":$cpus}"""
       try {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("BENCH_LOCAL.json"), fullLine + "\n")

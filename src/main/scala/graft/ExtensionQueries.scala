@@ -940,7 +940,7 @@ object ExtensionQueries {
     * not just spec-pinned. Reads the same train-once layout as
     * [[x62_bpe_pack]]. */
   private val x62a_bpe_merges: QFn = (s, d) =>
-    s.read.parquet(Catalog(s, x62MergesDir(s, d)).path("bpe_merges"))
+    Catalog(s, x62MergesDir(s, d)).table("bpe_merges")
       .select(col("rank").cast("long").as("merge_rank"),
         col("left").as("lhs"), col("right").as("rhs"))
 
@@ -3417,7 +3417,9 @@ object ExtensionQueries {
     // lang. The count grain is ~5x smaller than the raw explode, and
     // the vocab-sized word-total barrier populates its cache
     // race-free; repetition keeps its own gram-grain pass — 2 tokenize
-    // passes total, PipelineSpec-audited.
+    // passes total, PipelineSpec-audited. The (doc, lang) spine comes
+    // from the count grain too, not a third corpus scan: the inner join
+    // with the entropy signal keeps exactly the docs that have words.
     val tfw = docs0.select(col("doc_id"), col("lang"),
       explode(TF.words(col("text"))).as("word"))
       .groupBy(col("doc_id"), col("lang"), col("word"))
@@ -3434,7 +3436,7 @@ object ExtensionQueries {
       .select(col("word"))
     val hhMass = tfw.join(broadcast(hh), Seq("word"))
       .groupBy(col("lang")).agg(sum(col("c")).as("hh_tokens"))
-    docs0.select(col("doc_id"), col("lang"))
+    tfw.select(col("doc_id"), col("lang")).distinct()
       .join(ent.select(col("doc_id"), col("n_words"), col("entropy_q")),
         Seq("doc_id"))
       .join(rep.select(col("doc_id"), col("keep")), Seq("doc_id"))

@@ -19,6 +19,22 @@ import org.apache.spark.sql.types.StructType
   * At 100 TB a "table" is a partitioned directory tree; everything here is
   * path-based so the same code runs against a data-lake layout. Nothing is
   * collected to the driver.
+  *
+  * Opening a table runs no Spark job once its schema is known: every
+  * parquet read goes through [[Catalog.readParquet]], which passes the
+  * schema to the reader instead of inferring it (inference is one job
+  * per open, ~100 ms on a warm session). Schemas live in a JVM-wide
+  * cache keyed by the table's qualified path, a fingerprint of its
+  * recursive file listing (names, sizes, modification times) and the
+  * session confs that change what inference returns
+  * (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` — e.g.
+  * `nanosAsLong` — partition-type inference, the timestamp type and
+  * case sensitivity). Any write that adds, replaces or removes a file
+  * changes the listing, so it invalidates the entry whoever wrote it —
+  * this catalog, a stream sink or another process; the next open infers
+  * once and refills it. [[append]] re-keys the schema it just
+  * shape-checked to the post-write listing, so appends through the
+  * catalog keep hitting.
   */
 final case class Catalog(spark: SparkSession, dir: String) {
 
@@ -26,8 +42,7 @@ final case class Catalog(spark: SparkSession, dir: String) {
     * (reference: src/operators/sourcing/table_scan.rs:16-141) for plain
     * (non-versioned) tables; MVCC-versioned tables live in [[graft.mvcc]].
     */
-  def table(name: String): DataFrame =
-    spark.read.parquet(path(name))
+  def table(name: String): DataFrame = Catalog.readParquet(spark, path(name))
 
   /** [[table]] with an under-split guard for compute-heavy map
     * pipelines (text hashing, vector math): if the source offers fewer
@@ -140,6 +155,7 @@ final case class Catalog(spark: SparkSession, dir: String) {
         s"append to '$name' rejected: compaction in flight " +
           s"(${compactSentinel(name)} present)")
     rows.write.mode("append").parquet(path(name))
+    Catalog.rememberSchema(spark, path(name), existing)
     if (inFlight())
       throw new IllegalStateException(
         s"append to '$name' raced a concurrent compaction: the appended " +
@@ -198,7 +214,7 @@ final case class Catalog(spark: SparkSession, dir: String) {
       val staging = new HPath(s"${path(name)}.compact-stage")
       fs.delete(staging, true)
       graft.mvcc.LogTable.compact(log, asOf).write.parquet(staging.toString)
-      val after = spark.read.parquet(staging.toString).count()
+      val after = Catalog.readParquet(spark, staging.toString).count()
       publish(name, staging, "compactLog")
       before - after
     } finally if (exists(name)) fs.delete(sentinel, false)
@@ -842,6 +858,65 @@ object Catalog {
     * stops hinting `broadcast()` — ~1M single-key rows is tens of MB
     * on the wire, the conventional ceiling for a useful broadcast. */
   val TombstoneBroadcastMaxRows: Long = 1000000L
+
+  /** Open the parquet table at `path` — the one parquet reader of the
+    * library. With a cached schema for the table's current listing it
+    * reads `spark.read.schema(s).parquet(path)`, which runs no job;
+    * otherwise it infers once (`spark.read.parquet(path)`, one job) and
+    * caches the result. A missing or unreadable path is not cached, so
+    * it raises exactly the error the plain read raises. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((k, listing)) =>
+        Option(schemas.get(k)).collect { case (l, s) if l == listing => s } match {
+          case Some(s) => spark.read.schema(s).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(k, (listing, df.schema))
+            df
+        }
+    }
+
+  /** Record `schema` as the schema of `path`'s current listing — for a
+    * writer that just added files of a known shape (no inference). */
+  private[catalog] def rememberSchema(spark: SparkSession, path: String,
+      schema: StructType): Unit =
+    schemaKey(spark, path).foreach { case (k, listing) =>
+      schemas.put(k, (listing, schema))
+    }
+
+  /** (qualified path, inference confs) and the path's listing
+    * fingerprint — every file and directory under it, relative name,
+    * size and modification time, sorted; None when the path is missing. */
+  private def schemaKey(spark: SparkSession, path: String)
+      : Option[((String, Seq[(String, String)]), Seq[(String, Long, Long)])] = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    if (!fs.exists(root)) None
+    else {
+      val prefix = root.toString.length
+      def walk(st: org.apache.hadoop.fs.FileStatus): Iterator[(String, Long, Long)] =
+        Iterator((st.getPath.toString.drop(prefix), st.getLen,
+            st.getModificationTime)) ++
+          (if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk)
+           else Iterator.empty)
+      val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        InferenceConfPrefixes.exists(k.startsWith) }.sorted
+      Some(((root.toString, confs), walk(fs.getFileStatus(root)).toSeq.sorted))
+    }
+  }
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val InferenceConfPrefixes = Seq("spark.sql.parquet.",
+    "spark.sql.legacy.parquet.", "spark.sql.sources.partition",
+    "spark.sql.timestampType", "spark.sql.caseSensitive")
+
+  /** (qualified path, inference confs) → (listing fingerprint, schema):
+    * one entry per table and conf set, replaced when the listing moves. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, String)]), (Seq[(String, Long, Long)], StructType)]()
 
   /** (sidecar path, dir mtime) → row count, for the broadcast gate. */
   private[catalog] val tombstoneCounts =

@@ -236,20 +236,6 @@ object BpeOps {
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
 
-  /** Free a `localCheckpoint`ed frame's blocks. `Dataset.unpersist` is
-    * a no-op on a checkpointed frame (the CacheManager never saw it);
-    * the blocks belong to the `LogicalRDD` leaf's RDD, so unpersist
-    * THAT. Safe only once nothing will recompute from the frame —
-    * localCheckpoint truncates lineage, so lost blocks are
-    * unrecoverable. Best-effort: a plan that is not the expected leaf
-    * shape is left alone. */
-  private def freeCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Learn up to `numMerges` merges from the corpus. Stops early when
     * no adjacent pair occurs more than once (merging a unique pair
     * learns nothing). Returns the merges in application order.
@@ -263,8 +249,8 @@ object BpeOps {
     * (explainString for the SQL-listener event) OOMed the driver long
     * before any data did. Storage stays bounded too: round k's eager
     * checkpoint materializes it, after which round k-1's blocks are
-    * freed ([[freeCheckpointed]]) — at most two vocab-sized tables
-    * live at any moment, zero after train() returns. */
+    * freed ([[graft.engine.Barrier.release]]) — at most two vocab-sized
+    * tables live at any moment, zero after train() returns. */
   def train(docs: DataFrame, textCol: String = "text",
       numMerges: Int = 32): Seq[Merge] = {
     var words = wordCounts(docs, textCol)
@@ -293,13 +279,13 @@ object BpeOps {
           words = prev
             .select(col("cnt"), applyMerge(col("syms"), l, r).as("syms"))
             .transform(graft.engine.Barrier.lineageBarrier)
-          freeCheckpointed(prev)
+          graft.engine.Barrier.release(prev)
           rank += 1
         }
       }
       merges.toSeq
     } finally {
-      freeCheckpointed(words)
+      graft.engine.Barrier.release(words)
     }
   }
 
@@ -317,7 +303,7 @@ object BpeOps {
   /** Reload a [[writeMerges]] table, in application order. */
   def readMerges(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Merge] =
-    spark.read.parquet(path).orderBy(col("rank"))
+    graft.catalog.Catalog.readParquet(spark, path).orderBy(col("rank"))
       .collect().map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
       .toSeq
 

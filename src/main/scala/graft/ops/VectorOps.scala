@@ -378,22 +378,6 @@ object VectorOps {
     saved
   }
 
-  /** Exact-decimal Gram (second-moment) matrix Σ x xᵀ over the vector
-    * column — the first step of distributed PCA and the only
-    * corpus-sized pass of [[pcaPower]]. Per row, all d² coordinate
-    * products are emitted inside whole-stage codegen (two chained
-    * posexplodes — nothing is materialized before the partial
-    * aggregate) and quantized to DECIMAL(28,9) before the EXACT sum, so
-    * the matrix is a pure function of the data, independent of
-    * partitioning and shuffle order — the property that lets the
-    * downstream iteration hash-check across engines. Dims are 1-based.
-    *
-    * 100 TB shape: map-side volume is n·d² products but the shuffle
-    * carries only d² keys × partitions (partial agg collapses each
-    * partition to ≤ d² rows) — the classic distributed-Gramian plan.
-    * For d beyond a few hundred, quantize/shard the vector first
-    * (d² = 4096 at d=64; 10⁶ at d=1000 is still fine — the shuffle is
-    * constant in n either way). */
   // ---------------------------------------------------------------
   // Product quantization (Jégou et al., "Product Quantization for
   // Nearest Neighbor Search", TPAMI 2011) — the memory side of
@@ -813,21 +797,162 @@ object VectorOps {
       .filter(col("rnk") <= k)
   }
 
-  def gramMatrix(e: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    e.select(col(idCol), col(vecCol).as("__v"),
-        posexplode(col(vecCol)).as(Seq("__i", "__xi")))
-      .select((col("__i") + 1).cast("long").as("i"), col("__xi"),
-        posexplode(col("__v")).as(Seq("__j", "__xj")))
-      .select(col("i"), (col("__j") + 1).cast("long").as("j"),
-        round(col("__xi").cast("double") * col("__xj").cast("double"), 9)
-          .cast("decimal(28,9)").as("p"))
-      .groupBy(col("i"), col("j"))
-      .agg(sum(col("p")).cast("decimal(20,9)").as("m"))
+  /** Exact Gram (second-moment) matrix Σ x xᵀ over the vector column —
+    * the first step of distributed PCA and the only corpus-sized pass of
+    * [[pcaPower]]/[[pcaPower2]]. Cell (i, j) is defined as the SQL
+    * composition
+    * {{{
+    *   sum(cast(round(double(x_i) * double(x_j), 9) as decimal(28,9)))
+    *     cast as decimal(20,9)
+    * }}}
+    * over every vector (two chained `posexplode`s and a (i, j)
+    * aggregate), and is computed here in ONE fused pass that never
+    * materializes the n·d² product rows: each task folds its rows into a
+    * d×d table of scaled integers (1e-9 units), and one `treeAggregate`
+    * sums the per-task tables into the returned matrix. Exactness:
+    *  - only the upper triangle is accumulated and then mirrored:
+    *    float→double products commute, so the two halves of the SQL
+    *    matrix are bitwise equal;
+    *  - a term's units are `floor(|p|·1e9 + 0.5)` (sign restored) when
+    *    |p| < 4 and the fraction of |p|·1e9 is not within 1e-6 of .5.
+    *    There the double error of |p|·1e9 and of Spark's shortest-decimal
+    *    rendering of p together stay below 1e-6 units, so the HALF_UP
+    *    decision is the one Spark's `round` makes, and the rounded value
+    *    survives the cast back unchanged. Every other term (near-ties,
+    *    large or non-finite products) is evaluated by Spark's own `Cast`
+    *    and `Round` expressions under the session's ANSI mode, so it
+    *    rounds, returns NULL or fails exactly as the builtin does;
+    *  - sums use `Math.addExact` and spill to `BigInteger` on overflow,
+    *    so they are exact in any order — the matrix is independent of
+    *    partitioning;
+    *  - the final DECIMAL(20,9) cast is Spark's own `Cast`: NULL or the
+    *    same overflow error as the builtin. (The intermediate
+    *    DECIMAL(38,9) sum cannot overflow below 10¹⁰ terms.)
+    * Ragged vectors contribute their own (i, j) pairs, null elements
+    * contribute nothing, and null or empty vectors nothing at all; a
+    * cell with no non-null term is null, as the SQL sum. The matrix is
+    * d×d for the longest vector's d (0×0 when there is none).
+    *
+    * 100 TB shape: one map-only corpus pass; each task ships one d²
+    * table, merged in a tree — constant in n. */
+  private[graft] def gram(e: DataFrame,
+      vecCol: String = "embedding"): Array[Array[java.math.BigDecimal]] = {
+    val ansi = e.sparkSession.sessionState.conf.ansiEnabled
+    e.select(col(vecCol).cast("array<double>")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        var acc = new GramAcc(0, ansi)
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val a = r.getArray(0)
+            val n = a.numElements()
+            if (n > acc.d) acc = acc.grown(n)
+            for (i <- 0 until n if !a.isNullAt(i)) {
+              val xi = a.getDouble(i)
+              for (j <- i until n if !a.isNullAt(j))
+                acc.add(i, j, xi * a.getDouble(j))
+            }
+          }
+        }
+        Iterator.single(acc)
+      }
+      .treeAggregate(new GramAcc(0, ansi))(_ merge _, _ merge _)
+      .matrix
+  }
+
+  /** One task's (or one merge's) share of [[gram]]: per cell of the
+    * upper triangle, the exact sum of its 1e-9-unit terms as a `Long`
+    * plus a lazily allocated `BigInteger` overflow part, and whether any
+    * non-null term arrived. Row-major d×d, only i ≤ j used. */
+  private final class GramAcc(val d: Int, ansi: Boolean) extends Serializable {
+    import java.math.{BigDecimal => JBD, BigInteger}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+      EvalMode, Literal, Round}
+    import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType}
+
+    private val units = new Array[Long](d * d)
+    private val seen = new Array[Boolean](d * d)
+    private var spill: Array[BigInteger] = null
+
+    /** The builtin per-term expression, for the terms the fast path
+      * does not decide. */
+    @transient private lazy val term = Cast(
+      Round(BoundReference(0, DoubleType, nullable = false), Literal(9), ansi),
+      DecimalType(28, 9), None, EvalMode.fromBoolean(ansi))
+
+    def add(i: Int, j: Int, p: Double): Unit = {
+      val k = i * d + j
+      val t = math.abs(p) * 1e9
+      val f = t - math.floor(t)
+      if (t < 4e9 && math.abs(f - 0.5) > 1e-6) {
+        val u = math.floor(t + 0.5).toLong
+        addUnits(k, if (p < 0) -u else u)
+        seen(k) = true
+      } else term.eval(InternalRow(p)) match {
+        case v: Decimal =>
+          addUnits(k, v.toJavaBigDecimal.setScale(9).unscaledValue)
+          seen(k) = true
+        case _ => () // NULL term: non-ANSI cast of NaN/∞ or an overflow
+      }
+    }
+
+    private def addUnits(k: Int, u: Long): Unit =
+      try units(k) = Math.addExact(units(k), u)
+      catch { case _: ArithmeticException => spillUnits(k, BigInteger.valueOf(u)) }
+
+    private def addUnits(k: Int, u: BigInteger): Unit =
+      if (u.bitLength < 64) addUnits(k, u.longValue) else spillUnits(k, u)
+
+    private def spillUnits(k: Int, u: BigInteger): Unit = {
+      if (spill == null) spill = Array.fill(d * d)(BigInteger.ZERO)
+      spill(k) = spill(k).add(u)
+    }
+
+    private def total(k: Int): BigInteger = {
+      val u = BigInteger.valueOf(units(k))
+      if (spill == null) u else u.add(spill(k))
+    }
+
+    /** A copy sized for vectors of length `n` > d. */
+    def grown(n: Int): GramAcc = new GramAcc(n, ansi).merge(this)
+
+    /** Fold `o` into the larger of the two; returns it. */
+    def merge(o: GramAcc): GramAcc =
+      if (o.d > d) o.merge(this)
+      else {
+        for (i <- 0 until o.d; j <- i until o.d) {
+          val k = i * o.d + j
+          if (o.seen(k)) {
+            addUnits(i * d + j, o.total(k))
+            seen(i * d + j) = true
+          }
+        }
+        this
+      }
+
+    /** The symmetric DECIMAL(20,9) matrix (null = SQL NULL cell). */
+    def matrix: Array[Array[JBD]] = {
+      val narrow = Cast(BoundReference(0, DecimalType(38, 9), nullable = false),
+        DecimalType(20, 9), None, EvalMode.fromBoolean(ansi))
+      val m = Array.ofDim[JBD](d, d)
+      for (i <- 0 until d; j <- i until d) {
+        val k = i * d + j
+        val v =
+          if (!seen(k)) null
+          else narrow.eval(InternalRow(Decimal(new JBD(total(k), 9)))) match {
+            case c: Decimal => c.toJavaBigDecimal
+            case _ => null
+          }
+        m(i)(j) = v
+        m(j)(i) = v
+      }
+      m
+    }
+  }
 
   /** Dominant principal component by UNROLLED power iteration — the
     * distributed-PCA core (top eigenvector of the second-moment
-    * matrix), fully deterministic: [[gramMatrix]]'s exact-decimal M,
+    * matrix), fully deterministic: [[gram]]'s exact-decimal M,
     * v₀ = e₁, and `iters` rounds of v ← round((M v)/‖M v‖∞, 6). Every
     * round's matrix-vector product is exact decimal arithmetic
     * (DECIMAL(20,9) × DECIMAL(8,6) summed without precision loss), the
@@ -841,66 +966,26 @@ object VectorOps {
     * measure-zero on real data). ‖M v‖∞ of the last round is the
     * eigenvalue estimate (‖v‖∞ = 1 by construction). Output:
     * (dim — 1-based, loading ∈ [−1,1] with ‖·‖∞ = 1, lambda).
+    * This is [[pcaPower2]]'s component 1.
     *
-    * 100 TB shape: one distributed corpus pass ([[gramMatrix]]);
-    * everything after is d²-sized and runs as a driver constant-fold
-    * (Spark's own `RowMatrix.computePrincipalComponents` split —
-    * distribute the Gramian, centralize the eigenwork). Nothing
-    * data-sized ever reaches the driver. */
-  def pcaPower(e: DataFrame, iters: Int = 8, idCol: String = "vec_id",
+    * 100 TB shape: one distributed corpus pass ([[gram]]); everything
+    * after is d²-sized and runs as a local constant-fold (Spark's own
+    * `RowMatrix.computePrincipalComponents` split — distribute the
+    * Gramian, centralize the eigenwork). Nothing data-sized is ever
+    * collected. */
+  def pcaPower(e: DataFrame, iters: Int = 8,
       vecCol: String = "embedding"): DataFrame = {
-    require(iters >= 1, s"need iters >= 1, got $iters")
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    // The split of labor here is Spark's own PCA design
-    // (mllib RowMatrix.computePrincipalComponents): the Gramian is the
-    // data-sized pass and runs DISTRIBUTED; the iteration is d²-sized
-    // and runs as a driver constant-fold — scheduling d²-row rounds
-    // across a cluster is pure overhead (measured: 8 DataFrame rounds
-    // cost ~25 s of job latency at d=64 vs milliseconds here, on an
-    // identical result). The collect is d²-BOUNDED — dimensionality-
-    // sized like the BPE convergence witness, never data-sized.
-    val rows = gramMatrix(e, idCol, vecCol).collect()
-    val dims = rows.map(_.getLong(0)).distinct.sorted
-    val d = dims.length
-    val idx = dims.zipWithIndex.toMap
-    val M = Array.fill(d, d)(JBD.ZERO.setScale(9))
-    rows.foreach { r =>
-      M(idx(r.getLong(0)))(idx(r.getLong(1))) = r.getDecimal(2)
-    }
-    // The arithmetic below replays the SQL semantics EXACTLY, so the
-    // unrolled-CTE oracle still matches digit for digit: M·v and the
-    // ∞-norm are exact decimal ops (order-free); only the
-    // normalization ratio passes through IEEE doubles, re-quantized
-    // HALF_UP at 1e-6 (Spark's round()) with the −0.0 guard.
-    var v: Array[JBD] = dims.map(dim =>
-      (if (dim == 1L) JBD.ONE else JBD.ZERO).setScale(6))
-    var mx = JBD.ZERO
-    for (_ <- 1 to iters) {
-      val w = Array.tabulate(d) { i =>
-        (0 until d).foldLeft(JBD.ZERO) { (a, j) =>
-          a.add(M(i)(j).multiply(v(j)))
-        }
-      }
-      mx = w.map(_.abs).reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
-      v = w.map { wi =>
-        val q = JBD.valueOf(wi.doubleValue / mx.doubleValue)
-          .setScale(6, RoundingMode.HALF_UP).doubleValue + 0.0
-        JBD.valueOf(q).setScale(6)
-      }
-    }
-    val lambda = JBD.valueOf(mx.doubleValue)
-      .setScale(4, RoundingMode.HALF_UP).doubleValue
+    val (loadings, lambdas) = powerIterate(e, iters, vecCol, components = 1)
     val sp = e.sparkSession
     import sp.implicits._
-    dims.zip(v).toSeq
-      .map { case (dim, vi) => (dim, vi.doubleValue, lambda) }
+    loadings.head.zipWithIndex.toSeq
+      .map { case (vi, i) => (i + 1L, vi.doubleValue, lambdas.head) }
       .toDF("dim", "loading", "lambda")
   }
 
   /** Top-TWO principal components — [[pcaPower]] extended by
     * ORTHOGONAL ITERATION (Hotelling deflation in its numerically
-    * robust per-round form): component 1 replays pcaPower's rounds
-    * VERBATIM (same v₀ = e₁, same quantization points — x105's
+    * robust per-round form): component 1 is pcaPower's iterate (x105's
     * component-1 rows equal x95's output digit for digit, spec-pinned);
     * component 2 starts at e₂ and each round Gram–Schmidt-projects the
     * matrix-vector product against v₁ before normalizing
@@ -915,24 +1000,43 @@ object VectorOps {
     * 100 TB shape: identical to [[pcaPower]] — ONE distributed gram
     * pass; both iterations are d²-bounded driver constant-folds.
     * Output: (component ∈ {1,2}, dim, loading, lambda). */
-  def pcaPower2(e: DataFrame, iters: Int = 8, idCol: String = "vec_id",
+  def pcaPower2(e: DataFrame, iters: Int = 8,
       vecCol: String = "embedding"): DataFrame = {
-    require(iters >= 1, s"need iters >= 1, got $iters")
+    val (loadings, lambdas) = powerIterate(e, iters, vecCol, components = 2)
+    val sp = e.sparkSession
+    import sp.implicits._
+    loadings.zip(lambdas).zipWithIndex.flatMap { case ((v, lam), c) =>
+      v.zipWithIndex.map { case (vi, i) =>
+        (c + 1L, i + 1L, vi.doubleValue, lam) }
+    }.toDF("component", "dim", "loading", "lambda")
+  }
+
+  /** The power-iteration core of [[pcaPower]] and [[pcaPower2]]: the
+    * first `components` (1 or 2) loading vectors and their lambdas.
+    * The split of labor is Spark's own PCA design (mllib
+    * RowMatrix.computePrincipalComponents): the Gramian is the
+    * data-sized pass and runs DISTRIBUTED; the iteration is d²-sized
+    * and runs as a local constant-fold — scheduling d²-row rounds
+    * across a cluster is pure overhead (measured: 8 DataFrame rounds
+    * cost ~25 s of job latency at d=64 vs milliseconds here, on an
+    * identical result). The arithmetic replays the SQL semantics
+    * EXACTLY, so the unrolled-CTE oracle matches digit for digit: M·v,
+    * dot products and the ∞-norm are exact decimal ops (order-free);
+    * only the ratios pass through IEEE doubles, re-quantized HALF_UP
+    * (Spark's round()) with the −0.0 guard. */
+  private def powerIterate(e: DataFrame, iters: Int, vecCol: String,
+      components: Int): (Seq[Array[java.math.BigDecimal]], Seq[Double]) = {
     import java.math.{BigDecimal => JBD, RoundingMode}
-    val rows = gramMatrix(e, idCol, vecCol).collect()
-    val dims = rows.map(_.getLong(0)).distinct.sorted
-    val d = dims.length
-    require(d >= 2, s"need >= 2 dims for a second component, got $d")
-    val idx = dims.zipWithIndex.toMap
-    val M = Array.fill(d, d)(JBD.ZERO.setScale(9))
-    rows.foreach { r =>
-      M(idx(r.getLong(0)))(idx(r.getLong(1))) = r.getDecimal(2)
-    }
+    require(iters >= 1, s"need iters >= 1, got $iters")
+    val M = gram(e, vecCol)
+    val d = M.length
+    require(components == 1 || d >= 2,
+      s"need >= 2 dims for a second component, got $d")
     def mv(v: Array[JBD]): Array[JBD] = Array.tabulate(d) { i =>
-      (0 until d).foldLeft(JBD.ZERO) { (a, j) =>
-        a.add(M(i)(j).multiply(v(j)))
-      }
+      (0 until d).foldLeft(JBD.ZERO)((a, j) => a.add(M(i)(j).multiply(v(j))))
     }
+    def dot(a: Array[JBD], b: Array[JBD]): JBD =
+      (0 until d).foldLeft(JBD.ZERO)((s, i) => s.add(a(i).multiply(b(i))))
     def normalize(w: Array[JBD]): (Array[JBD], JBD) = {
       val mx = w.map(_.abs).reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
       (w.map { wi =>
@@ -941,34 +1045,28 @@ object VectorOps {
         JBD.valueOf(q).setScale(6)
       }, mx)
     }
-    var v1: Array[JBD] = Array.tabulate(d)(i =>
-      (if (i == 0) JBD.ONE else JBD.ZERO).setScale(6))
-    var mx1 = JBD.ZERO
-    for (_ <- 1 to iters) {
-      val (nv, nm) = normalize(mv(v1)); v1 = nv; mx1 = nm
-    }
-    val n2 = v1.foldLeft(JBD.ZERO)((a, x) => a.add(x.multiply(x)))
-    var v2: Array[JBD] = Array.tabulate(d)(i =>
-      (if (i == 1) JBD.ONE else JBD.ZERO).setScale(6))
-    var mx2 = JBD.ZERO
-    for (_ <- 1 to iters) {
-      val w = mv(v2)
-      val dot = (0 until d).foldLeft(JBD.ZERO)((a, i) =>
-        a.add(w(i).multiply(v1(i))))
-      val c = JBD.valueOf(dot.doubleValue / n2.doubleValue)
-        .setScale(9, RoundingMode.HALF_UP)
-      val o = Array.tabulate(d)(i => w(i).subtract(c.multiply(v1(i))))
-      val (nv, nm) = normalize(o); v2 = nv; mx2 = nm
-    }
+    def unit(c: Int): Array[JBD] = Array.tabulate(d)(i =>
+      (if (i == c) JBD.ONE else JBD.ZERO).setScale(6))
     def lam(mx: JBD): Double = JBD.valueOf(mx.doubleValue)
       .setScale(4, RoundingMode.HALF_UP).doubleValue
-    val sp = e.sparkSession
-    import sp.implicits._
-    (dims.zipWithIndex.map { case (dim, i) =>
-       (1L, dim, v1(i).doubleValue, lam(mx1)) } ++
-     dims.zipWithIndex.map { case (dim, i) =>
-       (2L, dim, v2(i).doubleValue, lam(mx2)) })
-      .toSeq.toDF("component", "dim", "loading", "lambda")
+    // component c: v ← normalize(M v minus its projection on the earlier
+    // component), from v₀ = e_c
+    (0 until components).foldLeft((Seq.empty[Array[JBD]], Seq.empty[Double])) {
+      case ((vs, ls), c) =>
+        var v = unit(c)
+        var mx = JBD.ZERO
+        val prev = vs.lastOption.map(p => (p, dot(p, p)))
+        for (_ <- 1 to iters) {
+          val w = prev.fold(mv(v)) { case (p, pp) =>
+            val w0 = mv(v)
+            val k = JBD.valueOf(dot(w0, p).doubleValue / pp.doubleValue)
+              .setScale(9, RoundingMode.HALF_UP)
+            Array.tabulate(d)(i => w0(i).subtract(k.multiply(p(i))))
+          }
+          val (nv, nm) = normalize(w); v = nv; mx = nm
+        }
+        (vs :+ v, ls :+ lam(mx))
+    }
   }
 
   /** Projection of every vector onto a trained component — the acting

@@ -159,7 +159,8 @@ object EventStreams {
           if (!fs.exists(new org.apache.hadoop.fs.Path(logPath))) withFp
           else {
             val existing = graft.mvcc.LogTable
-              .snapshot(spark.read.parquet(logPath), asOf = Long.MaxValue)
+              .snapshot(graft.catalog.Catalog.readParquet(spark, logPath),
+                asOf = Long.MaxValue)
               .select(col("fp"))
             withFp.join(existing, Seq("fp"), "left_anti")
           }
