@@ -223,14 +223,16 @@ object ExtensionQueries {
       .withColumn("n_members", count(lit(1)).over(wCl))
   }
 
-  /** x36 computed by the OTHER algorithm: alternating large-star /
-    * small-star contraction ([[graft.ops.GraphOps
-    * .connectedComponentsStar]], Kiveris et al. SoCC'14) — converges in
-    * O(log² n) rounds on ANY graph shape where min-label propagation
-    * needs O(diameter) hops. Same pair input, same output contract,
-    * same oracle: a hash-green row here is the correctness evidence for
-    * the diameter-independent path (crawl rings, boilerplate-gradient
-    * chains) that x36's shallow-clique-optimized form can't cover. */
+  /** x36 computed by the OTHER algorithm ([[graft.ops.GraphOps
+    * .connectedComponentsStar]]): the pair plan runs once into a
+    * barrier, each partition is contracted by a local union-find, and
+    * when that barrier is one partition (the fixture's pair graph is)
+    * the one task's forest is the exact answer, with no round run.
+    * Larger graphs continue with alternating large-star / small-star
+    * rounds (Kiveris et al. SoCC'14): O(log² n) rounds on ANY graph
+    * shape where min-label propagation needs O(diameter) hops. Same
+    * pair input, same output contract, same oracle: a hash-green row
+    * here is the correctness evidence for the contraction path. */
   private val x46_dup_clusters_star: QFn = (s, d) => {
     val pairs = graft.ops.TextDedup.minhashLshPairs(docsR(s, d),
       shingleK = ShingleK, numHashes = NumHashes, bands = 4, threshold = 0.8)

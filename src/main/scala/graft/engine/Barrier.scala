@@ -97,6 +97,11 @@ object Barrier {
       case _ => None
     }
 
+  /** Partition count of a barrier frame's materialized blocks, read
+    * without running a job; None for a frame that is not a barrier. */
+  private[graft] def partitions(df: DataFrame): Option[Int] =
+    leafRdd(df).map(_.getNumPartitions)
+
   /** Free what a barrier materialized for `df`: its blocks, a lazy
     * reliable barrier's persisted upstream, and a reliable checkpoint's
     * directory. `Dataset.unpersist` is a no-op on a checkpointed frame

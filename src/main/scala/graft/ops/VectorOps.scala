@@ -217,17 +217,20 @@ object VectorOps {
     * quantized re-center ([[kmeansStepCentroids]]). Each round's
     * centroid frame is localCheckpointed — it is centroid-sized (k
     * rows), and without the checkpoint the logical plan doubles per
-    * round. Nothing corpus-sized ever reaches the driver; with
-    * `tol > 0` the driver additionally holds ONE scalar per round (the
-    * max centroid L2 shift — the convergence witness, same pattern as
-    * [[graft.ops.GraphOps.connectedComponents]]) and stops early once
-    * it drops below `tol`. With `tol = 0` the loop runs exactly `iters`
+    * round; a superseded barrier is released once its last reader (the
+    * shift probe) has run. Nothing corpus-sized ever reaches the
+    * driver; with `tol > 0` the driver additionally holds ONE scalar
+    * per round (the max centroid L2 shift — the convergence witness,
+    * same pattern as [[graft.ops.GraphOps.connectedComponents]]) and
+    * stops early once it drops below `tol`. With `tol = 0` the loop runs exactly `iters`
     * rounds — the deterministic form an unrolled SQL oracle can mirror.
     */
   def kmeansTrain(e: DataFrame, initK: Int, iters: Int, tol: Double = 0.0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     var cent = e.filter(col(idCol) < initK)
       .select(col(idCol).as("c_id"), col(vecCol).as("c_e"))
+    // the newest barriered round; every later round reads only it
+    var held: Option[DataFrame] = None
     var round = 0
     var shifted = true
     while (round < iters && shifted) {
@@ -242,8 +245,9 @@ object VectorOps {
       // points cannot shift a digit.
       val step = kmeansStepCentroids(
         ivfCells(e, cent, nprobe = 1, idCol = idCol, vecCol = vecCol))
+      val barriered = tol > 0 || round % 3 == 2
       val next =
-        if (tol > 0 || round % 3 == 2) step.transform(graft.engine.Barrier.lineageBarrier) else step
+        if (barriered) step.transform(graft.engine.Barrier.lineageBarrier) else step
       if (tol > 0) {
         // max L2 shift over surviving cells — one scalar to the driver
         val shift = next.as("n")
@@ -255,6 +259,11 @@ object VectorOps {
             lit(0.0), (acc, v) => acc + v)).as("d"))
           .agg(max(col("d"))).head.getDouble(0)
         shifted = shift >= tol
+      }
+      // the shift probe was the superseded barrier's last reader
+      if (barriered) {
+        held.foreach(graft.engine.Barrier.release)
+        held = Some(next)
       }
       cent = next
       round += 1
@@ -482,8 +491,9 @@ object VectorOps {
     * `ksub` vectors' subvectors (c_id = vec_id, the deterministic seed
     * rule the kmeans family uses), then exactly `iters` Lloyd rounds —
     * the unrolled-oracle form. Output: (sub, c_id, c_e). Each round's
-    * codebook is m·ksub rows, localCheckpointed to stop plan growth;
-    * the subvector frame is persisted once and scanned per round. */
+    * codebook is m·ksub rows, localCheckpointed to stop plan growth and
+    * released once the next round is materialized; the subvector frame
+    * is persisted once, scanned per round and unpersisted at the end. */
   def pqTrain(e: DataFrame, m: Int = 4, ksub: Int = 8, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val svs = pqSubvectors(e, m, idCol, vecCol)
@@ -492,10 +502,13 @@ object VectorOps {
       .select(col("sub"), col("vec_id").as("c_id"), col("sv").as("c_e"))
       .transform(graft.engine.Barrier.lineageBarrier)
     for (_ <- 1 to iters) {
-      cent = pqRecenter(
+      val next = pqRecenter(
         pqAssign(svs, cent).select(col("sub"), col("code"), col("sv")))
         .transform(graft.engine.Barrier.lineageBarrier)
+      graft.engine.Barrier.release(cent)
+      cent = next
     }
+    svs.unpersist()
     cent
   }
 

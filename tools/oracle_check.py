@@ -129,9 +129,11 @@ def _check(task):
 # ---------- parent side ----------
 
 def _write_json_atomic(path, records):
+    # sorted keys: a re-run with the same verdicts leaves no reorder diff
+    # (records fill in completion order)
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        json.dump(records, f, indent=2)
+        json.dump(records, f, indent=2, sort_keys=True)
     os.replace(tmp, path)
 
 
