@@ -397,7 +397,7 @@ object ExtensionQueries {
       .select(col("doc_id"), col("keep").as("y"))
     val feats = graft.ops.ClassifierOps.logregFeatures(all)
       .join(y, Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val w = graft.ops.ClassifierOps.logregTrain(
       feats.filter(col("doc_id") % 5 =!= 0), steps = X135Steps)
     graft.ops.ClassifierOps.logregScore(
@@ -775,7 +775,7 @@ object ExtensionQueries {
   private val x137_cm_counts: QFn = (s, d) => {
     val words = docsR(s, d)
       .select(explode(TF.words(col("text"))).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     // deliberately LAZY (r18 A/B): an eager barrier on the exact
     // counts measured 0.89x — the sketch and count branches'
     // duplicated explodes overlap on idle cores and beat the
@@ -1178,7 +1178,7 @@ object ExtensionQueries {
       .select(col("doc_id"), explode(TF.words(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     // eager barrier on the vocab-sized counts (r18 shared-
     // materialization shape): populates the perDocWord cache race-free
     // for the hot/cold join probe
@@ -2660,7 +2660,7 @@ object ExtensionQueries {
     import s.implicits._
     val pairs = graft.ops.TextDedup.minhashLshPairs(docsR(s, d),
       shingleK = ShingleK, numHashes = NumHashes, bands = 4, threshold = 0.7)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val thresholds = Seq(0.7, 0.8, 0.9)
     val th = explode(array(thresholds.map(lit): _*)).as("threshold")
     // eager barrier on the thresholds-sized pair counts (r18 shared-
@@ -3426,7 +3426,7 @@ object ExtensionQueries {
       explode(TF.words(col("text"))).as("word"))
       .groupBy(col("doc_id"), col("lang"), col("word"))
       .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val wcnt = graft.engine.Barrier.lineageBarrier(
       tfw.groupBy(col("word")).agg(sum(col("c")).as("cnt")))
     val ent = graft.ops.CorpusOps.entropySignalFromCounts(
@@ -3561,7 +3561,7 @@ object ExtensionQueries {
         // drop-set-sized rows; the 4-tier union otherwise caches 128
         // near-empty partitions that every consumer re-schedules
         .repartition(4)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.engine.Barrier.sharedGrain)
     // eager barrier on the 4-row tier sizes (r18 shared-materialization
     // shape): its job populates the drops cache race-free, so the
     // overlap self-join and the final matrix read it warm instead of

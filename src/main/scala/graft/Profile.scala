@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Diagnostic main — the guide-§1 empirical loop with
   * `spark.ui.enabled=false`: run the named queries (all of them with no
@@ -15,7 +17,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *    per table. A same-table count > 1 for the same projection means a
   *    shared subtree was recomputed per consumer branch (lazy cache
   *    raced cold, or column pruning specialized the branches), the
-  *    duplicate-lineage pathology.
+  *    duplicate-lineage pathology;
+  *  - the Janino compiles the run paid (construction and execution,
+  *    driver and executors) and their summed compile time, from
+  *    `CodegenMetrics` and `CodeGenerator.compileTime`: a warm rep that
+  *    still compiles means a generated class missed the codegen cache.
   *
   *   SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.Profile x61_lm_scores"
   *
@@ -75,10 +81,14 @@ object Profile {
     names.foreach { name =>
       (1 to reps).foreach { rep =>
         stages.clear()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
         qe.toRdd.count()
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
         // The listener bus delivers stage-completed events asynchronously;
         // without a drain pause, late events can be missed or bleed into
         // the next rep after stages.clear() (r17 ADVICE). listenerBus is
@@ -96,6 +106,7 @@ object Profile {
         val tot = stages.map(_.ms).filter(_ > 0).sum
         println(f"stage-ms total: $tot (wall ${wall * 1000}%.0f ms; gap = " +
           "driver/planning/scheduling)")
+        println(f"codegen: $compiles compiles, $compileMs%.0f ms compiling")
         println(s"census: ${census(qe.executedPlan.toString)}")
       }
     }

@@ -1,13 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /** Centralized plan barriers — the ONE place the engine truncates
-  * lineage or blocks predicate pushdown, so the mechanism can be
-  * switched per deployment instead of hard-coding
-  * `localCheckpoint` at ~15 call sites.
+  * lineage, blocks predicate pushdown or shares a grain between
+  * consumers, so the mechanism can be switched per deployment instead
+  * of hard-coding `localCheckpoint` or `persist` at ~45 call sites.
   *
-  * Two distinct contracts, two entry points:
+  * Three distinct contracts, three entry points:
   *
   *  - [[pushdownBarrier]] (lazy): stops Catalyst from substituting a
   *    heavy defining expression (chargram/shingle sets, simhash,
@@ -20,8 +23,17 @@ import org.apache.spark.sql.DataFrame
   *    iterative algorithms (k-means rounds, connected-components
   *    rounds, BPE merges) whose plan would otherwise double per round.
   *    Eager: runs a job now, returns a frame whose plan is a block scan.
+  *  - [[sharedGrain]] (lazy, shared, no session clone): a frame that
+  *    several consumers of one query read is cached MEMORY_AND_DISK on
+  *    its first action and every later plan that contains it reads the
+  *    cache. Unlike `Dataset.persist`, which clones the session on
+  *    every call (Spark turns two configs off for cached plans), every
+  *    grain of a session is planned in ONE memoised cache session, so
+  *    its executor-side classes are compiled once per JVM instead of
+  *    once per call. Construction stays job-free.
   *
-  * Mechanism switch (`SPARK_GRAFT_BARRIER`):
+  * Mechanism switch (`SPARK_GRAFT_BARRIER`, the first two contracts;
+  * a shared grain is a cache under both):
   *
   *  - `local` (default): `localCheckpoint` — blocks stored
   *    UNREPLICATED on executors, lineage gone. Right for local mode and
@@ -64,11 +76,58 @@ object Barrier {
   private[graft] def pushdownBarrier(df: DataFrame, mode: String): DataFrame =
     mode match {
       case "reliable" =>
-        val out = df.persist().checkpoint(eager = false)
+        val out = sharedGrain(df).checkpoint(eager = false)
         reliableUpstreams.put(leafRdd(out).get, df)
         out
       case _ => df.localCheckpoint(eager = false)
     }
+
+  /** Lazy shared grain: cache `df` (MEMORY_AND_DISK) at its first
+    * action, as `df.persist(MEMORY_AND_DISK)` would, and return `df`
+    * unchanged. No job runs at call time. The cached plan is built in
+    * [[cacheSession]], so repeated calls compile nothing new. Free it
+    * with `df.unpersist()` or a storage sweep, as with `persist`. */
+  def sharedGrain(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    spark.sharedState.cacheManager.cacheQuery(cacheSession(spark),
+      df.queryExecution.normalized, None, StorageLevel.MEMORY_AND_DISK)
+    df
+  }
+
+  /** The session that plans `parent`'s cached grains. `CacheManager`
+    * plans a cached query with auto bucketed scan off and, unless the
+    * cached plan may change its output partitioning, final-stage
+    * shuffle optimisations off; a session with either on is cloned per
+    * call, and each clone's new session id gives it its own executor
+    * class loader, which `CodeGenerator`'s cache keys on. This session
+    * has both already off, so `cacheQuery` plans in it as it is. It
+    * carries `parent`'s modifiable confs and is memoised per parent and
+    * snapshot of those confs: a conf change builds a fresh one, as the
+    * per-call clone would have seen the change. */
+  private def cacheSession(parent: SparkSession): classic.SparkSession = {
+    val confs = parent.conf.getAll.filter { case (k, _) =>
+      parent.conf.isModifiable(k) }
+    cacheSessions.synchronized {
+      Option(cacheSessions.get(parent)).filter(_._1 == confs).map(_._2)
+        .getOrElse {
+          val cs = classic.ClassicConversions.castToImpl(parent).newSession()
+          confs.foreach { case (k, v) => cs.conf.set(k, v) }
+          cs.conf.set(SQLConf.AUTO_BUCKETED_SCAN_ENABLED.key, "false")
+          if (!cs.conf.get(
+              SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING.key).toBoolean)
+            cs.conf.set(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS
+              .key, "false")
+          cacheSessions.put(parent, (confs, cs))
+          cs
+        }
+    }
+  }
+
+  /** [[cacheSession]]'s memo: parent → (conf snapshot, cache session);
+    * weak, so a dropped parent session does not pin its cache session. */
+  private val cacheSessions =
+    new java.util.WeakHashMap[SparkSession,
+      (Map[String, String], classic.SparkSession)]()
 
   /** Eager lineage truncation for iterative plans: runs a job NOW and
     * returns a frame whose plan is a scan of the materialized blocks.

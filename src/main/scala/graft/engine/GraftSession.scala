@@ -18,6 +18,25 @@ import org.apache.spark.sql.SparkSession
   *   - autoBroadcastJoinThreshold left at default (10 MB): dimension tables
   *     (region/nation/supplier/part at any SF we test) broadcast; fact-fact
   *     joins shuffle on their keys.
+  *
+  * Codegen posture: a repeated query compiles nothing new. Janino
+  * compiles are CPU on the critical path (`graft.Profile` rotating the
+  * seven perfbench `pipeline` queries at sf0.01: ~320 compiles and
+  * ~3.4 s of compile time per warm pass, all recompiles of unchanged
+  * code), so two confs keep every generated class in `CodeGenerator`'s
+  * cache:
+  *   - `spark.sql.codegen.cache.maxEntries=1000` (static, so it is set
+  *     here): the default 100 is below the engine's working set and the
+  *     cache thrashes.
+  *   - `spark.sql.codegen.useIdInClassName=false`: AQE renumbers
+  *     whole-stage codegen stages between runs, so with ids in class
+  *     names the same code gets a new name and a new cache key.
+  *   With [[Barrier.sharedGrain]]'s one cache session a warm pass
+  *   compiles 0–4 classes. A/B on a 4-core host, untraced `pipeline`,
+  *   `--seconds 10`, 10 alternating pairs: wall 7.66 → 4.92 s per pass
+  *   (cpu 21.7 → 14.5 s). Either half alone is not enough (3 runs
+  *   each): the confs alone gave 6.0–6.4 s, the cache session alone
+  *   8.8–9.2 s, because a 100-entry cache still thrashes.
   */
 object GraftSession {
 
@@ -55,6 +74,8 @@ object GraftSession {
       // latter. Queries normalize through graft.functions.EventTime
       // (always epoch-ns long downstream) whatever the encoding.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Get-or-create with graft defaults (idempotent for tests). */
   def getOrCreate(): SparkSession = {

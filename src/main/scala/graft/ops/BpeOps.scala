@@ -217,7 +217,7 @@ object BpeOps {
       .select(col(idCol).as("doc_id"),
         posexplode(TF.words(col(textCol))).as(Seq("pos", "w")))
       .filter(length(col("w")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val vocab = wordPos.select(col("w")).distinct()
     val wIds = encodeTokens(vocab, merges, vocabIds(vocab, merges))
     wordPos.join(wIds, Seq("w"))

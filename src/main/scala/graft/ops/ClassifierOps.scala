@@ -87,7 +87,7 @@ object ClassifierOps {
     val cw = words(train, Seq(labelCol), textCol)
       .groupBy(col(labelCol).as("label"), col("w"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     // EAGER barrier on the labels-sized totals (r18, the CorpusOps
     // shared-materialization shape): tot's job populates the cw cache
     // race-free; the other cw consumers (vsize, wl) then read it warm
@@ -225,7 +225,7 @@ object ClassifierOps {
     * (w0 bias, w1, w2, w3) in micro units. */
   def logregTrain(feats: DataFrame, yCol: String = "y",
       steps: Int = 4): Seq[Long] = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = graft.engine.Barrier.sharedGrain(feats)
     def dhuS(num: BigInt, den: BigInt): BigInt =
       if (num < 0) -((-num * 2 + den) / (den * 2))
       else (num * 2 + den) / (den * 2)

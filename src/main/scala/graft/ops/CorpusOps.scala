@@ -18,13 +18,14 @@ object CorpusOps {
   /** Pre-tokenized corpus view (doc_id, ws: array<string>) — the shared
     * input of the `FromWords` scoring forms. Composed pipelines
     * (unigram + bigram LM scoring, span stats) should compute this ONCE,
-    * `persist(MEMORY_AND_DISK)` it, and feed every consumer:
-    * tokenization (normalize + split) is the single most repeated map
-    * cost in a scoring stack, and the cache makes it a one-pass cost.
-    * (persist, NOT localCheckpoint: checkpointing calls `toRdd` at
-    * construction, which under AQE materializes every shuffle stage
-    * before the caller ever runs an action — persist defers ALL work
-    * to the first action and hands back an unpersist handle.) */
+    * share it through [[graft.engine.Barrier.sharedGrain]], and feed
+    * every consumer: tokenization (normalize + split) is the single most
+    * repeated map cost in a scoring stack, and the cache makes it a
+    * one-pass cost. (A shared grain, NOT a `localCheckpoint`:
+    * checkpointing calls `toRdd` at construction, which under AQE
+    * materializes every shuffle stage before the caller ever runs an
+    * action — a shared grain defers ALL work to the first action,
+    * `unpersist` frees it, and its plan compiles once per JVM.) */
   def tokenized(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     docs.select(col(idCol).as("doc_id"), TF.words(col(textCol)).as("ws"))
@@ -75,7 +76,7 @@ object CorpusOps {
     val tf = words.select(col("doc_id"), explode(col("ws")).as("word"))
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val counts = graft.engine.Barrier.lineageBarrier(
       tf.groupBy(col("word")).agg(sum(col("tf")).as("cnt")))
     val denom = Denom.joined(unigramTotals(counts))
@@ -265,7 +266,7 @@ object CorpusOps {
     // sparkContext.getPersistentRDDs (the Bench/test hygiene).
     val inBlk = base.withColumn("off_in_blk",
       coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val wBlk = Window.orderBy("blk")
       .rowsBetween(Window.unboundedPreceding, -1)
     val blkOff = inBlk.groupBy("blk")
@@ -532,7 +533,7 @@ object CorpusOps {
   def bigramLmScore(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val toks = tokenized(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     bigramLmScoreFromWords(toks, vocab = Some(vocabOf(toks)))
   }
 
@@ -551,7 +552,7 @@ object CorpusOps {
     val tf2 = words.select(col("doc_id"), explode(bigrams(col("ws"))).as("bg"))
       .groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val cb = graft.engine.Barrier.lineageBarrier(
       tf2.groupBy(col("bg")).agg(sum(col("tf")).as("cb")))
     val cl = cb.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
@@ -605,7 +606,7 @@ object CorpusOps {
     val tf2 = words.select(col("doc_id"), explode(bigrams(col("ws"))).as("bg"))
       .groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val cb = graft.engine.Barrier.lineageBarrier(
       bigramSides(tf2.groupBy(col("bg")).agg(sum(col("tf")).as("cb"))))
     val (left, cont) = knStats(cb)
@@ -785,7 +786,7 @@ object CorpusOps {
   def lmScores(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val toks = tokenized(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     lmScoreFromWords(toks)
       .join(bigramLmScoreFromWords(toks, vocab = Some(vocabOf(toks))),
         Seq("doc_id"), "left")
@@ -945,7 +946,7 @@ object CorpusOps {
     val toks = docs
       .select(col(idCol).as("doc_id"), TF.words(col(textCol)).as("ws"))
       .withColumn("n", size(col("ws")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val sts = toks.filter(col("n") >= minLen)
       .select(col("doc_id"), col("ws"), col("n"),
         explode(sequence(lit(1), col("n") - (minLen - 1))).as("st"))
@@ -954,7 +955,7 @@ object CorpusOps {
     val fps = sts.select(col("doc_id"), col("st"),
       TF.hash60(concat_ws(" ", slice(col("ws"), col("st"), lit(minLen))),
         "exact|").as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val dupFp = graft.engine.Barrier.lineageBarrier(
       fps.groupBy(col("fp")).agg(count(lit(1)).as("c"))
         .filter(col("c") > 1).select(col("fp")))
@@ -965,7 +966,7 @@ object CorpusOps {
     val candWin = cand.join(toks, Seq("doc_id"))
       .select(col("doc_id"), col("st"),
         concat_ws(" ", slice(col("ws"), col("st"), lit(minLen))).as("win"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val occ = graft.engine.Barrier.lineageBarrier(
       candWin.groupBy(col("win"))
         .agg(count(lit(1)).as("n_occ"),
@@ -1355,7 +1356,7 @@ object CorpusOps {
     val toks = docs.select(col(groupCol), col(idCol).as("doc_id"),
         TF.tokenCount(col(textCol)).as("n_tokens"),
         TF.hash60(col(idCol).cast("string"), "mix|").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     // eager barrier on the groups-sized plan (r18 shared-
     // materialization shape): populates the toks cache race-free for
     // the blocked prefix-sum and block-offset consumers
@@ -2060,7 +2061,7 @@ object CorpusOps {
         TF.words(col(textCol)).as("ws"),
         length(regexp_replace(TF.normText(col(textCol)), " ", ""))
           .cast("long").as("tot"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val ws = col("ws")
     def grams(n: Int): Column =
       when(size(ws) >= n,
@@ -2200,7 +2201,7 @@ object CorpusOps {
     val sh = docs.select(pmod(col(idCol), lit(waves)).as("batch"),
         explode(TF.shingleSetFast(TF.words(col(textCol)), shingleK))
           .as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     // deliberately LAZY (r18 A/B): an eager barrier on the novelty
     // rollup measured 0.87x — the two consumers' duplicated shingle
     // explodes overlap on idle cores and beat the serialized
@@ -2367,7 +2368,7 @@ object CorpusOps {
       .select(col(groupCol), explode(TF.words(col(textCol))).as("word"))
       .groupBy(col(groupCol), col("word"))
       .agg(count(lit(1)).as("cnt_s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     // eager barrier on the vocab-sized corpus counts (r18 shared-
     // materialization shape): cc's job populates the sc cache
     // race-free; ns and the scoring join then read it warm
@@ -2587,7 +2588,7 @@ object CorpusOps {
       // entropy gate (and owns no chunks), flowing through to the mix
       .withColumn("low", coalesce(col("ent_q") < col("cut"), lit(false)))
       .withColumn("uni", !col("low") && coalesce(col("uni0"), lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val poolIds = gates.filter(!col("low") && !col("uni"))
       .select(col("doc_id"))
     val chunks = graft.ops.TextDedup.cdcChunkFps(
@@ -2604,7 +2605,7 @@ object CorpusOps {
     val g2 = gates.join(own, Seq("doc_id"), "left")
       .withColumn("dup", !col("low") && !col("uni") &&
         coalesce(col("n_owned") * 2 < col("n_chunks"), lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val rates = temperatureRates(
       g2.filter(!col("low") && !col("uni") && !col("dup"))
         .select(col("doc_id"), col("grp").as(groupCol)),

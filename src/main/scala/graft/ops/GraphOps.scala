@@ -3,7 +3,6 @@ package graft.ops
 import graft.engine.Barrier
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph primitives for dedup-cluster resolution.
   *
@@ -53,7 +52,7 @@ object GraphOps {
     val edges = fwd.unionByName(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Barrier.sharedGrain)
     // localCheckpoint (eager) TRUNCATES LINEAGE each round — without it
     // the logical plan doubles per iteration (labels appears twice per
     // round) and planning itself blows up exponentially. On a cluster

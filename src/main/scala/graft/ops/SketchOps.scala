@@ -64,7 +64,7 @@ object SketchOps {
     val spark = rows.sparkSession
     import spark.implicits._
     val vals = rows.select(col(valueCol).cast("string").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     val ds: Dataset[String] = vals.as[String]
     // EAGER barrier on the candidate set (≤ k·partitions rows): its job
     // populates the vals cache race-free, so the total count and the

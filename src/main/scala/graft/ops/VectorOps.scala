@@ -497,7 +497,7 @@ object VectorOps {
   def pqTrain(e: DataFrame, m: Int = 4, ksub: Int = 8, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val svs = pqSubvectors(e, m, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.engine.Barrier.sharedGrain)
     var cent = svs.filter(col("vec_id") < ksub)
       .select(col("sub"), col("vec_id").as("c_id"), col("sv").as("c_e"))
       .transform(graft.engine.Barrier.lineageBarrier)

@@ -21,8 +21,11 @@ r14-r16 driver artifacts were literally `{}`). v2:
   * the --json record is rewritten ATOMICALLY (tmp + os.replace) after
     every completed query — a killed run ships every record finished so
     far;
-  * per-query oracle wall time is printed as results arrive and stored in
-    each record's "sec" field, so a slow round is attributable;
+  * per-query oracle wall time is printed as results arrive, and the
+    eight slowest close the run in a "slowest oracles" line, so a slow
+    round is attributable; it is not written to the --json record, which holds only the verdicts in
+    the driver's per-query format, so a re-run with the same verdicts
+    leaves the file byte-identical;
   * a dump dir with zero committed part files (a killed mode=overwrite
     write leaves only _temporary/) records EXEC_ERROR instead of
     aborting the whole run.
@@ -73,14 +76,12 @@ def _norm(rel):
 def _check(task):
     """Returns (query, human_result, record_dict)."""
     q, qd = task
-    t0 = time.time()
 
     def rec(rows_match, schema_match, hash_match, spark_rows, oracle_rows,
             err):
         return {"rows_match": rows_match, "schema_match": schema_match,
                 "hash_match": hash_match, "spark_rows": spark_rows,
-                "oracle_rows": oracle_rows, "err": err,
-                "sec": round(time.time() - t0, 2)}
+                "oracle_rows": oracle_rows, "err": err}
 
     # a killed parallel Verify leaves dirs holding only _temporary/ — that
     # is a missing dump, not a reason to abort the other 193 compares
@@ -126,21 +127,27 @@ def _check(task):
     return (q, msg, r)
 
 
+def _timed_check(task):
+    """`_check` plus its wall seconds (for the progress lines only)."""
+    t0 = time.time()
+    return (*_check(task), time.time() - t0)
+
+
 # ---------- parent side ----------
 
 def _write_json_atomic(path, records):
-    # sorted keys: a re-run with the same verdicts leaves no reorder diff
-    # (records fill in completion order)
+    # queries sorted (records fill in completion order), fields in the
+    # driver's order: a re-run with the same verdicts leaves no diff
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        json.dump(records, f, indent=2, sort_keys=True)
+        json.dump({q: records[q] for q in sorted(records)}, f, indent=2)
     os.replace(tmp, path)
 
 
 def main(sf_dir, out_dir, json_out, par):
     t_start = time.time()
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    records, results = {}, {}
+    records, results, secs = {}, {}, {}
     # queries whose dump FAILED are reported by Verify in errors.json —
     # surface them as failures instead of silently shrinking the set
     errs_path = f"{out_dir}/errors.json"
@@ -150,7 +157,7 @@ def main(sf_dir, out_dir, json_out, par):
             records[q] = {"rows_match": False, "schema_match": False,
                           "hash_match": False, "spark_rows": None,
                           "oracle_rows": None,
-                          "err": f"spark exec error: {msg[:200]}", "sec": 0}
+                          "err": f"spark exec error: {msg[:200]}"}
     # the dump dir of a failed query is STALE (the run failed before
     # overwriting it) — comparing it would mask the failure
     tasks = [(os.path.basename(d), d)
@@ -162,11 +169,12 @@ def main(sf_dir, out_dir, json_out, par):
     threads = max(1, cpu_count() // max(1, par))
     done = 0
     with Pool(par, _init, (sf_dir, oracle, threads)) as pool:
-        for q, msg, r in pool.imap_unordered(_check, tasks, chunksize=1):
-            results[q], records[q] = msg, r
+        for q, msg, r, sec in pool.imap_unordered(_timed_check, tasks,
+                                                  chunksize=1):
+            results[q], records[q], secs[q] = msg, r, sec
             done += 1
             print(f"[{done}/{len(tasks)} t+{time.time() - t_start:5.1f}s "
-                  f"{r['sec']:6.2f}s] {q}: {msg}", flush=True)
+                  f"{sec:6.2f}s] {q}: {msg}", flush=True)
             if json_out:
                 _write_json_atomic(json_out, records)
     fails = 0
@@ -177,9 +185,8 @@ def main(sf_dir, out_dir, json_out, par):
         if not ok:
             print(f"{q:<{width}}  {results[q]}")
             fails += 1
-    slow = sorted(records.items(), key=lambda kv: -kv[1].get("sec", 0))[:8]
-    print("slowest oracles: " + ", ".join(
-        f"{q}={r.get('sec', 0):.1f}s" for q, r in slow))
+    slow = sorted(secs.items(), key=lambda kv: -kv[1])[:8]
+    print("slowest oracles: " + ", ".join(f"{q}={t:.1f}s" for q, t in slow))
     print(f"{len(results) - fails}/{len(results)} pass "
           f"in {time.time() - t_start:.1f}s (par={par}, "
           f"{threads} duckdb threads each)")
