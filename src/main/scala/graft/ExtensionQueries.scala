@@ -209,34 +209,19 @@ object ExtensionQueries {
     * MinHash-LSH near-dup pairs (x07's edges): the per-pair decisions
     * (x33) leave dangling canonicals on transitive chains (a~b, b~c
     * points c at b, itself dropped); component resolution maps every
-    * member to ONE true canonical (the component-min doc_id). Iterative min-label propagation, Pregel-style — see
-    * [[graft.ops.GraphOps.connectedComponents]] for the 100 TB shape
-    * (per-round equi-join + groupBy-min, driver holds only the
-    * convergence flag). Output: every clustered doc with its canonical
-    * id and the cluster size. */
+    * member to ONE true canonical (the component-min doc_id). See
+    * [[graft.ops.GraphOps.connectedComponents]] for the 100 TB shape:
+    * the pair plan runs once into a barrier, each partition is
+    * contracted by a local union-find, and when that barrier is one
+    * partition (the fixture's pair graph is) the one task's forest is
+    * the exact answer, with no round run; larger graphs continue with
+    * large-star / small-star rounds, O(log² n) on any graph shape.
+    * Output: every clustered doc with its canonical id and the cluster
+    * size. x46 is the same query under its own registry name. */
   private val x36_dup_clusters: QFn = (s, d) => {
     val pairs = graft.ops.TextDedup.minhashLshPairs(docsR(s, d),
       shingleK = ShingleK, numHashes = NumHashes, bands = 4, threshold = 0.8)
     val labels = graft.ops.GraphOps.connectedComponents(pairs)
-    val wCl = Window.partitionBy("cluster_id")
-    labels.select(col("node").as("doc_id"), col("cluster_id"))
-      .withColumn("n_members", count(lit(1)).over(wCl))
-  }
-
-  /** x36 computed by the OTHER algorithm ([[graft.ops.GraphOps
-    * .connectedComponentsStar]]): the pair plan runs once into a
-    * barrier, each partition is contracted by a local union-find, and
-    * when that barrier is one partition (the fixture's pair graph is)
-    * the one task's forest is the exact answer, with no round run.
-    * Larger graphs continue with alternating large-star / small-star
-    * rounds (Kiveris et al. SoCC'14): O(log² n) rounds on ANY graph
-    * shape where min-label propagation needs O(diameter) hops. Same
-    * pair input, same output contract, same oracle: a hash-green row
-    * here is the correctness evidence for the contraction path. */
-  private val x46_dup_clusters_star: QFn = (s, d) => {
-    val pairs = graft.ops.TextDedup.minhashLshPairs(docsR(s, d),
-      shingleK = ShingleK, numHashes = NumHashes, bands = 4, threshold = 0.8)
-    val labels = graft.ops.GraphOps.connectedComponentsStar(pairs)
     val wCl = Window.partitionBy("cluster_id")
     labels.select(col("node").as("doc_id"), col("cluster_id"))
       .withColumn("n_members", count(lit(1)).over(wCl))
@@ -1894,7 +1879,7 @@ object ExtensionQueries {
     *
     * 100 TB shape: both edge generators are the already-measured
     * scale paths (equi band/cell joins); the union is edge-grain;
-    * components + decision are x36/x41's bounded-round machinery.
+    * the components are x36's contraction, the decision is x41's.
     * Embedding ids and doc ids share the key space (the fixture's
     * vec_id ≡ doc_id contract, as x31's hydration join uses).
     *
@@ -3692,7 +3677,7 @@ object ExtensionQueries {
     "x43_chargram_lsh" -> x43_chargram_lsh,
     "x44_media_binary" -> x44_media_binary,
     "x45_zorder_scan" -> x45_zorder_scan,
-    "x46_dup_clusters_star" -> x46_dup_clusters_star,
+    "x46_dup_clusters_star" -> x36_dup_clusters,
     "x47_simhash_pairbanded" -> x47_simhash_pairbanded,
     "x48_ann_trained" -> x48_ann_trained,
     "x49_zorder3_scan" -> x49_zorder3_scan,
@@ -3903,7 +3888,7 @@ object ExtensionQueries {
   // x36: transitive closure of x07's pair graph; min reachable id per
   // node = the component minimum (DuckDB's recursive CTE terminates on
   // the UNION-distinct fixpoint — the closure is exact, so it checks the
-  // Spark side's iterated propagation reached ITS fixpoint too).
+  // Spark side's contraction reached ITS fixpoint too).
   private lazy val x36Oracle: String =
     s"""WITH RECURSIVE pairs AS (
        |${oracles("x07_minhash_lsh_pairs")}
@@ -5771,7 +5756,7 @@ object ExtensionQueries {
       "x33_text_dedup_decision" -> x33Oracle,
       "x34_simhash_dedup_decision" -> x34Oracle,
       "x36_dup_clusters" -> x36Oracle,
-      // same components, same canonical labels — algorithm-independent
+      // x46 runs x36's body: same components, same canonical labels
       "x46_dup_clusters_star" -> x36Oracle,
       // both bandings are pigeonhole-exact ⇒ both must equal the
       // brute-force all-pairs oracle

@@ -244,9 +244,9 @@ object ScaleCheck {
     }
     // x36 on the dup-heavy corpus is the interesting one: the pair graph
     // gains D-cliques per original near-dup cluster (components MERGE
-    // across replicas through the exact twins), yet propagation depth
-    // stays shallow — cliques have diameter 1 — so the round count, not
-    // just the per-round cost, is what the measurement pins.
+    // across replicas through the exact twins), so the edge volume the
+    // contraction (and any star rounds after it) must absorb grows
+    // faster than the corpus.
 
     // Span-dedup stride sweep (Lee et al. fidelity vs cost): stride 1
     // is the suffix-array-grade mode — every window fingerprinted, the

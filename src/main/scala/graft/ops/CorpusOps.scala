@@ -59,20 +59,23 @@ object CorpusOps {
     * output) — the composition form that shares one tokenize pass with
     * [[bigramLmScoreFromWords]]. */
   def lmScoreFromWords(words: DataFrame): DataFrame = {
-    // Shared-materialization shape (r18; replaces the r17 all-lazy
-    // persists): the (doc, word) tf grain feeds the corpus-count branch
-    // AND the scoring join. All-lazy, AQE raced those consumers' leaf
-    // stages against a cold InMemoryRelation and the tokenize + groupBy
-    // lineage re-ran per consumer (the duplicate-lineage pathology the
-    // r17 verdict flagged). All-eager (checkpoint the tf grain) fixes
-    // the race but row-serializes a string-heavy frame (~6x the
-    // columnar cache size — measured on x59's bigram twin), taxing
-    // every consumer's read. So: LAZY columnar persist on the fat tf
-    // grain + EAGER barrier on the vocab-sized counts table derived
-    // from it — the counts job populates the tf cache race-free (it is
-    // the only consumer running at that point), and the scoring join
-    // then reads the warm compact cache. One compute of every grain,
-    // columnar read amplification, no race.
+    // Shared-materialization shape: the (doc, word) tf grain feeds the
+    // corpus-count branch AND the scoring join. Checkpointing the tf
+    // grain row-serializes a string-heavy frame (~6x the columnar cache
+    // size — measured on x59's bigram twin), taxing every consumer's
+    // read. So: LAZY columnar shared grain on the fat tf frame + EAGER
+    // barrier on the vocab-sized counts table derived from it — the
+    // counts job fills the tf cache at construction, and the scoring
+    // join then reads the warm compact cache and a materialized counts
+    // table. The barrier was added (r18) against an AQE race of the
+    // consumers' leaf stages on a cold cache; that race no longer
+    // happens (BarrierSpec pins one upstream evaluation for a lazy
+    // grain), but the barrier still pays: on perfbench `pipeline` (x61;
+    // 4-core host, seed 1, 4 alternating pairs) dropping this barrier
+    // and bigramLmScoreFromWords' went wall 3.70 -> 3.91 s and cpu
+    // 11.11 -> 12.07 s (construct jobs 21 -> 11, but exec 2.08 -> 2.29 s
+    // and shuffle read 1.61 -> 2.24 MiB); lazy shared grains in their
+    // place went wall 4.05 -> 4.30 s and cpu 12.28 -> 12.96 s.
     val tf = words.select(col("doc_id"), explode(col("ws")).as("word"))
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
@@ -545,10 +548,11 @@ object CorpusOps {
     * un-checkpointed callers pay a second tokenize there. */
   def bigramLmScoreFromWords(words: DataFrame,
       vocab: Option[DataFrame] = None): DataFrame = {
-    // shared-materialization shape (r18, see lmScoreFromWords): lazy
-    // columnar persist on the fat (doc, bigram) tf grain + eager
-    // barrier on the vocab-sized cb table — cb's job populates the tf2
-    // cache race-free and the scoring join reads it warm
+    // shared-materialization shape (see lmScoreFromWords, which also
+    // holds the A/B that keeps the barrier): lazy columnar shared grain
+    // on the fat (doc, bigram) tf grain + eager barrier on the
+    // vocab-sized cb table — cb's job fills the tf2 cache and the
+    // scoring join reads it warm
     val tf2 = words.select(col("doc_id"), explode(bigrams(col("ws"))).as("bg"))
       .groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("tf"))

@@ -16,106 +16,10 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Connected components by iterative min-label propagation: every
-    * node starts labeled with itself; each round a node adopts the
-    * minimum label among itself and its neighbors; at fixpoint the label
-    * is the component's minimum node id — the canonical document.
-    *
-    * Scale shape (100 TB): each propagation hop is one equi-join of the
-    * edge list against the label table plus one groupBy-min — all
-    * shuffles on uniform node ids, no driver-side data. The driver
-    * holds only a per-round convergence WITNESS (the label sum, which
-    * is monotone under min-propagation: unchanged ⟺ fixpoint — one tiny
-    * aggregate, no diff join), the same control pattern as
-    * Pregel/GraphX. Each round runs TWO hops between lineage
-    * checkpoints; hops needed = component diameter, so even shallow
-    * near-clique dup clusters pay at least two rounds (one to settle,
-    * one to confirm). [[connectedComponentsStar]] is the cheaper form on
-    * every shape: it contracts each partition locally first, finishes
-    * with no round at all when one task holds the whole edge set, and
-    * is diameter-independent otherwise. This form is kept for the
-    * queries and specs that pin its diameter-bounded `maxRounds` raise.
-    *
-    * Hitting `maxRounds` without reaching the fixpoint RAISES
-    * (IllegalStateException) — un-converged labels are silently wrong
-    * cluster ids, never a value a dedup decision may act on.
-    *
-    * @param pairs edge list, one row per undirected edge
-    * @param maxRounds hard iteration cap (2 hops per round)
-    * @return (node, cluster_id) — one row per node that appears in any
-    *         edge; cluster_id = min node id of the component
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
-      bCol: String = "b_id", maxRounds: Int = 20): DataFrame = {
-    val fwd = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-    val edges = fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .transform(Barrier.sharedGrain)
-    // localCheckpoint (eager) TRUNCATES LINEAGE each round — without it
-    // the logical plan doubles per iteration (labels appears twice per
-    // round) and planning itself blows up exponentially. On a cluster
-    // with lineage-reliability needs, swap for reliable checkpoint()
-    // (HDFS-backed); the algorithm is unchanged.
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("cluster_id", col("node"))
-      .transform(Barrier.lineageBarrier)
-
-    // labels only ever DECREASE (min-propagation is monotone), so the
-    // label sum is a strictly-decreasing convergence witness: an
-    // unchanged sum ⟺ fixpoint — one tiny aggregate on the cached
-    // table per round instead of a join-based diff.
-    // decimal sum: 64-bit ids over trillion-node graphs would overflow
-    // a long sum
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
-    // one propagation step: every node adopts the min label among
-    // itself and its neighbors
-    def step(l: DataFrame): DataFrame = {
-      val prop = edges.join(l, edges("dst") === l("node"))
-        .select(edges("src").as("node"), col("cluster_id"))
-      l.unionByName(prop)
-        .groupBy("node").agg(min(col("cluster_id")).as("cluster_id"))
-    }
-    // empty edge set: sum() over zero rows is null — no components to
-    // resolve, return the (empty) label table without iterating
-    var prevSum = labelSum(labels)
-    var converged = prevSum == null
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // two steps per checkpoint: halves the per-round action overhead
-      // (the lineage doubles per step, so only a constant number of
-      // steps may run between checkpoints)
-      val next = step(step(labels)).transform(Barrier.lineageBarrier)
-      val nextSum = labelSum(next)
-      // next is materialized: the superseded round has no reader left
-      Barrier.release(labels)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      round += 1
-    }
-    // labels is materialized as checkpoint blocks; the edge cache is no
-    // longer needed
-    edges.unpersist()
-    if (!converged) {
-      Barrier.release(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds rounds " +
-          s"(${2 * maxRounds} hops) — the graph has a component of diameter " +
-          "> 2*maxRounds. Raise maxRounds, or use connectedComponentsStar " +
-          "(O(log^2 n) rounds regardless of diameter).")
-    }
-    labels
-  }
-
   /** Connected components by local union-find contraction followed,
     * when needed, by alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — diameter-independent: O(log² n) rounds on ANY graph,
-    * where min-label propagation ([[connectedComponents]]) needs
-    * O(diameter) hops.
+    * SoCC'14) — diameter-independent: O(log² n) rounds on ANY graph.
     *
     *  1. One eager barrier on the projected (src, dst) pairs: the pair
     *     plan runs once; the node set (lazy) and the canonical (lo < hi)
@@ -136,28 +40,33 @@ object GraphOps {
     *       m(u) = min — same shape.
     *     Both preserve connectivity; the combined fixpoint is the star
     *     forest where every node points at its component minimum (the
-    *     canonical doc id). Each round's edge set is an eager barrier
-    *     (lineage truncation — see [[connectedComponents]]); the round
-    *     it supersedes is released once its last reader has run.
+    *     canonical doc id). Each round's edge set is an eager barrier:
+    *     it truncates the lineage, without which the logical plan grows
+    *     with every round and planning itself blows up. The round it
+    *     supersedes is released once its last reader has run.
     *
     * Convergence detection: a (count, Σlo, Σhi) witness gates an exact
     * set-equality confirm (one left-anti probe, only run when the
     * witness matches — distinct sets of equal size are equal iff the
     * difference is empty). All shuffles are on uniform node-id keys; the
-    * driver holds the 3-field witness per round. Hitting `maxRounds`
-    * raises, as in [[connectedComponents]].
+    * driver holds the 3-field witness per round.
     *
+    * Hitting `maxRounds` rounds without reaching the fixpoint RAISES
+    * (IllegalStateException) — un-converged labels are silently wrong
+    * cluster ids, never a value a dedup decision may act on. The exact
+    * exit runs no round, so it never raises.
+    *
+    * @param pairs edge list, one row per undirected edge
+    * @param maxRounds hard cap on large-star/small-star rounds
     * @return (node, cluster_id) — one row per node that appears in any
-    *         edge; cluster_id = min node id of the component. Identical
-    *         contract (and spec-checked identical output) to
-    *         [[connectedComponents]].
+    *         edge; cluster_id = min node id of the component
     */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String = "a_id",
+  def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
       bCol: String = "b_id", maxRounds: Int = 50): DataFrame = {
     val raw = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst")).transform(Barrier.lineageBarrier)
     // every endpoint is a node (self-loop-only nodes included: they are
-    // their own singleton component, as in connectedComponents)
+    // their own singleton component)
     val nodes = raw.select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct()
     val canonical = raw.filter(col("src") =!= col("dst"))
@@ -223,7 +132,7 @@ object GraphOps {
         if (!converged) {
           Seq(edges, raw).foreach(Barrier.release)
           throw new IllegalStateException(
-            s"connectedComponentsStar did not converge within $maxRounds rounds " +
+            s"connectedComponents did not converge within $maxRounds rounds " +
               "— raise maxRounds (O(log^2 n) rounds suffice for n nodes).")
         }
         edges

@@ -220,10 +220,11 @@ object VectorOps {
     * round; a superseded barrier is released once its last reader (the
     * shift probe) has run. Nothing corpus-sized ever reaches the
     * driver; with `tol > 0` the driver additionally holds ONE scalar
-    * per round (the max centroid L2 shift — the convergence witness,
-    * same pattern as [[graft.ops.GraphOps.connectedComponents]]) and
-    * stops early once it drops below `tol`. With `tol = 0` the loop runs exactly `iters`
-    * rounds — the deterministic form an unrolled SQL oracle can mirror.
+    * per round (the max centroid L2 shift — a convergence witness, as
+    * the star rounds of [[graft.ops.GraphOps.connectedComponents]]
+    * hold) and stops early once it drops below `tol`. With `tol = 0`
+    * the loop runs exactly `iters` rounds — the deterministic form an
+    * unrolled SQL oracle can mirror.
     */
   def kmeansTrain(e: DataFrame, initK: Int, iters: Int, tol: Double = 0.0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

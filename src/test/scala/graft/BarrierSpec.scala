@@ -12,7 +12,9 @@ import graft.engine.Barrier
   * each barrier evaluates its upstream once, and [[Barrier.release]]
   * leaves no checkpoint directory and no persisted upstream behind.
   * The round loops release every superseded round, so what they leave
-  * persisted does not grow with the round count. */
+  * persisted does not grow with the round count (connected components:
+  * GraphOpsStarSpec). A lazy [[Barrier.sharedGrain]] read by several
+  * consumers of one query evaluates its upstream once. */
 class BarrierSpec extends SparkTestBase {
 
   private def rddDirs(root: Path): Seq[Path] = {
@@ -67,15 +69,6 @@ class BarrierSpec extends SparkTestBase {
     n
   }
 
-  test("connectedComponents releases superseded rounds: as much left persisted at 2 rounds as at 5") {
-    import spark.implicits._
-    // a chain of n nodes settles in ceil((n-1)/2) rounds of two hops,
-    // plus one round that confirms the fixpoint
-    def chain(n: Long) = (0L until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val held = Seq(3L, 9L).map(n => leftBehind(graft.ops.GraphOps.connectedComponents(chain(n))))
-    assert(held == Seq(1, 1), s"only the final labels may stay: $held")
-  }
-
   test("kmeansTrain(tol > 0) releases superseded rounds: as much left persisted at 2 rounds as at 5") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     def train(iters: Int) =
@@ -88,5 +81,39 @@ class BarrierSpec extends SparkTestBase {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val held = Seq(2, 5).map(n => leftBehind(graft.ops.VectorOps.pqTrain(e, iters = n)))
     assert(held == Seq(1, 1), s"only the final codebook may stay: $held")
+  }
+
+  test("a lazy sharedGrain read by three consumers of one query evaluates its upstream as often as an eager lineageBarrier, at 2 and 4 shuffle partitions") {
+    // the lmScoreFromWords shape: a (doc, word) tf grain feeds a counts
+    // branch, a total and the scoring join. Under AQE the three leaf
+    // stages could once race a cold cache and each re-run the tokenize
+    // lineage; the eager barrier form cannot race.
+    def run(grain: DataFrame => DataFrame): (Long, Seq[org.apache.spark.sql.Row]) = {
+      val evals = spark.sparkContext.longAccumulator("tokenize evaluations")
+      val tokenize = udf { (id: Long) =>
+        evals.add(1); Seq.tabulate(8)(i => s"w${(id * 7 + i * 13) % 97}") }
+      val words = spark.range(0, 2000, 1, 4)
+        .select(col("id").as("doc_id"), tokenize(col("id")).as("ws"))
+      val tf = grain(words.select(col("doc_id"), explode(col("ws")).as("word"))
+        .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")))
+      val counts = tf.groupBy(col("word")).agg(sum(col("tf")).as("cnt"))
+      val total = tf.agg(sum(col("tf")).as("n"))
+      val out = tf.join(counts, Seq("word")).crossJoin(total)
+        .groupBy(col("doc_id"))
+        .agg(sum(col("tf") * col("cnt")).as("s"), max(col("n")).as("n"))
+      try {
+        val rows = out.orderBy(col("doc_id")).collect().toSeq
+        (evals.value, rows)
+      } finally { tf.unpersist(blocking = true); Barrier.release(tf) }
+    }
+    for (parts <- Seq("2", "4")) withConf("spark.sql.shuffle.partitions", parts) {
+      val (eager, eagerRows) = run(Barrier.lineageBarrier)
+      val (lazyEvals, lazyRows) = run(Barrier.sharedGrain)
+      assert(eager >= 2000L, s"$parts partitions: $eager evaluations")
+      assert(lazyEvals == eager,
+        s"$parts partitions: the lazy grain evaluated its upstream $lazyEvals " +
+          s"times against $eager for the eager barrier")
+      assert(lazyRows == eagerRows, s"$parts partitions: outputs differ")
+    }
   }
 }

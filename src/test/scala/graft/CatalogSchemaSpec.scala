@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -50,42 +48,19 @@ class CatalogSchemaSpec extends SparkTestBase {
   }
 
   test("opening an unchanged table again runs no Spark job, also after a Catalog append") {
-    val jobs = new AtomicInteger()
-    val markers = new AtomicInteger()
-    val group = "catalog-schema-marker"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          markers.incrementAndGet()
-        else jobs.incrementAndGet()
-    }
-    // the listener bus is ordered: once a marker job is seen, every job
-    // started before it has been counted
-    def settled(): Int = {
-      val want = markers.get() + 1
-      spark.sparkContext.setJobGroup(group, "marker")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      while (markers.get() < want && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markers.get() >= want, "marker job never reached the listener")
-      jobs.get()
-    }
     val fixture = Catalog(spark, sf)
     val cat = tempCatalog()
     cat.createNew("log", Seq((1L, "a")).toDF("id", "s").schema)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      fixture.table("region"); cat.table("log")
-      val before = settled()
+    fixture.table("region"); cat.table("log")
+    val (_, cachedOpens) = jobsOf {
       assert(fixture.table("region").schema.nonEmpty)
       assert(cat.schema("log").fieldNames.toSeq == Seq("id", "s"))
-      assert(settled() == before, "a cached open ran a Spark job")
-      cat.append("log", Seq((2L, "b")).toDF("id", "s"))
-      val written = settled()
-      assert(cat.table("log").schema.fieldNames.toSeq == Seq("id", "s"))
-      assert(settled() == written, "an open after a Catalog append ran a Spark job")
-      assert(cat.table("log").count() == 1L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(cachedOpens == 0, "a cached open ran a Spark job")
+    cat.append("log", Seq((2L, "b")).toDF("id", "s"))
+    val (_, opensAfterAppend) = jobsOf(
+      assert(cat.table("log").schema.fieldNames.toSeq == Seq("id", "s")))
+    assert(opensAfterAppend == 0, "an open after a Catalog append ran a Spark job")
+    assert(cat.table("log").count() == 1L)
   }
 }

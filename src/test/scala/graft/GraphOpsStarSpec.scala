@@ -1,18 +1,14 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.GraphOps
 
-/** The contraction path of [[graft.ops.GraphOps.connectedComponentsStar]]:
-  * the exact one-partition exit, the multi-partition star rounds behind
-  * it (with AQE coalescing off, so the witness loop itself is what
-  * converges), its `maxRounds` raise, its job budget and the
-  * [[graft.ops.GraphOps.contract]] step on its own. Every result is
-  * compared with a driver-side union-find.
+/** [[graft.ops.GraphOps.connectedComponents]]: the exact one-partition
+  * exit, the multi-partition star rounds behind it (with AQE coalescing
+  * off, so the witness loop itself is what converges), its `maxRounds`
+  * raise, its job budget and the [[graft.ops.GraphOps.contract]] step
+  * on its own. Every result is compared with a driver-side union-find.
   */
 class GraphOpsStarSpec extends SparkTestBase {
 
@@ -36,7 +32,7 @@ class GraphOpsStarSpec extends SparkTestBase {
   }
 
   private def components(df: DataFrame, maxRounds: Int = 50): Map[Long, Long] =
-    GraphOps.connectedComponentsStar(df, maxRounds = maxRounds)
+    GraphOps.connectedComponents(df, maxRounds = maxRounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def randomGraph(seed: Int): Seq[(Long, Long)] = {
@@ -73,53 +69,12 @@ class GraphOpsStarSpec extends SparkTestBase {
   private def check(edges: Seq[(Long, Long)], parts: Int): Int = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val out = GraphOps.connectedComponentsStar(
+    val out = GraphOps.connectedComponents(
       edges.toDF("a_id", "b_id").repartition(parts))
     val held = (sc.getPersistentRDDs.keySet -- before).size
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == unionFind(edges),
       s"${edges.size} edges over $parts partition(s)")
     held
-  }
-
-  /** Run `body` with AQE partition coalescing off, restoring the
-    * session's setting afterwards. */
-  private def withoutCoalescing[T](body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Spark jobs `body` starts, counted by job group. A marker job in a
-    * second group runs after it; the listener bus delivers in order, so
-    * once the marker is seen (polled to a deadline) every job of
-    * `body` has been seen too. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"star-jobs-${System.nanoTime}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener-bus marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis + 10000
-      while (!seen.contains(marker) && System.currentTimeMillis < deadline)
-        Thread.sleep(50)
-      assert(seen.contains(marker), "the marker job never reached the listener")
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(l)
   }
 
   test("star path equals union-find over 1, 3 and 7 input partitions (self-loops and empty edge sets included)") {
@@ -128,7 +83,7 @@ class GraphOpsStarSpec extends SparkTestBase {
   }
 
   test("without AQE coalescing the multi-partition witness loop equals union-find, releases superseded rounds, and maxRounds raises") {
-    withoutCoalescing {
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
       // no round at all (empty) and several: superseded rounds are
       // released, so each call leaves only the pair barrier and the
       // final edge set behind
@@ -143,11 +98,10 @@ class GraphOpsStarSpec extends SparkTestBase {
     }
   }
 
-  test("one-partition 300-node chain: connectedComponentsStar plus collect runs at most 10 jobs") {
+  test("one-partition 300-node chain: connectedComponents plus collect runs at most 10 jobs") {
     val chain = (0L until 299L).map(i => (i, i + 1))
     val df = chain.toDF("a_id", "b_id").repartition(1)
-    var got = Map.empty[Long, Long]
-    val jobs = jobsOf { got = components(df) }
+    val (got, jobs) = jobsOf(components(df))
     assert(got.size == 300 && got.values.forall(_ == 0L))
     assert(jobs <= 10, s"$jobs jobs for a graph one task holds")
   }

@@ -19,6 +19,22 @@ import graft.ops.{CorpusOps, GraphOps, TextDedup}
   */
 class PipelineSpec extends SparkTestBase {
 
+  /** Bytes read from local files while `act` runs, from a cold start
+    * (every persisted RDD dropped first). Hadoop's global "file"-scheme
+    * statistics count REAL file I/O only (task-metric bytesRead also
+    * counts cached-block reads, which a shared persist legitimately
+    * produces in volume); local[4] runs executors in-process, so the
+    * counter is complete and synchronous once an action returns. */
+  private def bytesOf(act: => Unit): Long = {
+    def fileBytes(): Long = {
+      val s = org.apache.hadoop.fs.FileSystem
+        .getGlobalStorageStatistics.get("file")
+      if (s == null) 0L else s.getLong("bytesRead")
+    }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val before = fileBytes(); act; fileBytes() - before
+  }
+
   test("corpus prep pipeline: dedup -> decontaminate -> pack -> shuffle composes with conserved rows") {
     val docs = Catalog(spark, sf).table("documents")
     val nDocs = docs.count()
@@ -421,17 +437,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("x123 scan-amplification audit: the card's word-grain consumers share one persisted explode") {
-    val sc = spark.sparkContext
     val docs = Catalog(spark, sf).table("documents")
-    def fileBytes(): Long = {
-      val s = org.apache.hadoop.fs.FileSystem
-        .getGlobalStorageStatistics.get("file")
-      if (s == null) 0L else s.getLong("bytesRead")
-    }
-    def bytesOf(act: => Unit): Long = {
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val before = fileBytes(); act; fileBytes() - before
-    }
     // yardstick = ONE pass through the same rebalanced reader the card
     // uses (tableRebalanced's under-split guard adds a constant extra
     // file read, so the raw-table scan would undercount the unit)
@@ -451,22 +457,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("lmScores scan-amplification audit: composed unigram+bigram scoring reads the corpus once") {
-    val sc = spark.sparkContext
     val docs = Catalog(spark, sf).table("documents")
-    // Hadoop's global "file"-scheme statistics count REAL file I/O only
-    // (task-metric bytesRead also counts cached-block reads, which the
-    // shared persist legitimately produces in volume); local[4] runs
-    // executors in-process, so the counter is complete and synchronous
-    // once an action returns.
-    def fileBytes(): Long = {
-      val s = org.apache.hadoop.fs.FileSystem
-        .getGlobalStorageStatistics.get("file")
-      if (s == null) 0L else s.getLong("bytesRead")
-    }
-    def bytesOf(act: => Unit): Long = {
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val before = fileBytes(); act; fileBytes() - before
-    }
     // one full-text corpus scan as the yardstick (text dominates bytes)
     val single = bytesOf(
       docs.select(length(col("text")).as("n")).agg(sum(col("n"))).collect())
@@ -481,17 +472,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("knBigramScoreFromWords scan-amplification audit: KN scoring reads the corpus once") {
-    val sc = spark.sparkContext
     val docs = Catalog(spark, sf).table("documents")
-    def fileBytes(): Long = {
-      val s = org.apache.hadoop.fs.FileSystem
-        .getGlobalStorageStatistics.get("file")
-      if (s == null) 0L else s.getLong("bytesRead")
-    }
-    def bytesOf(act: => Unit): Long = {
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val before = fileBytes(); act; fileBytes() - before
-    }
     val single = bytesOf(
       docs.select(length(col("text")).as("n")).agg(sum(col("n"))).collect())
     // KN derives cb/cl/continuation/nb ALL from the persisted bigram tf
@@ -510,18 +491,8 @@ class PipelineSpec extends SparkTestBase {
     // final join-back — which without the shared persisted view would
     // each re-scan the corpus (column pruning specializes the scans,
     // defeating exchange reuse).
-    val sc = spark.sparkContext
     val docs = Catalog(spark, sf).table("documents")
     val merges = graft.ops.BpeOps.train(docs, numMerges = 4)
-    def fileBytes(): Long = {
-      val s = org.apache.hadoop.fs.FileSystem
-        .getGlobalStorageStatistics.get("file")
-      if (s == null) 0L else s.getLong("bytesRead")
-    }
-    def bytesOf(act: => Unit): Long = {
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val before = fileBytes(); act; fileBytes() - before
-    }
     val single = bytesOf(
       docs.select(length(col("text")).as("n")).agg(sum(col("n"))).collect())
     val encoded = bytesOf(
@@ -539,17 +510,7 @@ class PipelineSpec extends SparkTestBase {
     // both persist it. Without the cache, column pruning specializes
     // each consumer's scan and the corpus tokenizes once per consumer
     // (x63 read 3x before the round-12 fix).
-    val sc = spark.sparkContext
     val docs = Catalog(spark, sf).table("documents")
-    def fileBytes(): Long = {
-      val s = org.apache.hadoop.fs.FileSystem
-        .getGlobalStorageStatistics.get("file")
-      if (s == null) 0L else s.getLong("bytesRead")
-    }
-    def bytesOf(act: => Unit): Long = {
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val before = fileBytes(); act; fileBytes() - before
-    }
     val single = bytesOf(
       docs.select(length(col("text")).as("n")).agg(sum(col("n"))).collect())
     assert(single > 0, "yardstick scan measured zero file bytes")
